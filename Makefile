@@ -9,7 +9,7 @@
 # unaffected — it may legitimately run after dropping a new
 # CORRECTNESS file that the map can't have ingested yet.
 
-.PHONY: rotate guard fast test test-slow bench ship
+.PHONY: rotate guard fast test test-slow perfbench-test bench ship
 
 rotate:
 	python scripts/rebuild_driver_priority.py
@@ -32,6 +32,11 @@ test:
 # inside the external driver's wall-clock budget
 test-slow:
 	python -m pytest tests/ -q -m slow
+
+# the benchmark's own trace and generator checks (perfbench/tests is
+# outside the default testpaths, so `make test` never collects it)
+perfbench-test:
+	python3 -m pytest perfbench/tests -q
 
 bench: guard
 	python bench.py

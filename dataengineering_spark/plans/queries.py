@@ -29,6 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dataengineering_spark.caching import persist_tracked
 from dataengineering_spark.catalog import read_table
 from dataengineering_spark.functions.scalars import (
     conditional_sum,
@@ -314,7 +315,8 @@ def q_enrichment_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persisting the (tiny: |token universe|) dim caps it at two scans:
     # one to build the dim, one for the fact side of the join. At 100 TB
     # the saved pass dominates; at bench scale it's still net-positive.
-    metadata = metadata.persist()
+    # Tracked, so the caller's tracking_scope() releases it.
+    metadata = persist_tracked(metadata)
     # dimension: prices keyed by symbol (deterministic derivation)
     prices = metadata.select(
         "symbol",

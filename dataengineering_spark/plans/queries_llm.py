@@ -3483,11 +3483,10 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan. distinct() matches the oracle's list_distinct per doc;
     # persist because both the first-occurrence agg and the join-back
     # re-reference the frame.
-    # spread: exploded_shingles applies spread_for_compute itself; the
-    # r13 outer wrapper here DOUBLED the round-robin exchange of the
-    # full text payload (spread(spread(docs)) — inputFiles() sees the
-    # same single fixture file both times, so the inner call cannot
-    # detect the outer one; plan read 2 RoundRobin exchanges, r14: 1)
+    # no spread: neither this lane nor exploded_shingles round-robins
+    # the docs — the distinct() below is a keyed exchange that
+    # redistributes the grams anyway (r13 paid two RoundRobin
+    # exchanges of the full text payload here, r14 removed both)
     grams = persist_tracked(
         exploded_shingles(docs, "doc_id", "text", n=3)
         .select("doc_id", F.col("shingle").alias("g"))

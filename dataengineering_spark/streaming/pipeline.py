@@ -30,29 +30,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.streaming.rate_limited import block_range_stream
-from dataengineering_spark.streaming.state import SyncState, SyncStateStore
-
-
-def commit_from_destination(
-    store: SyncStateStore,
-    stream_name: str,
-    destination_max: Callable[[], int | None],
-) -> SyncState:
-    """Commit what LANDED, not what was attempted (reference
-    ``set_latest_block``, ``airflow/bitquery.py:288-351``): the
-    watermark is re-derived from the destination so a sink failure
-    can never advance past the durable data."""
-    landed = destination_max()
-    prev = store.get(stream_name)
-    committed = prev.last_synced_block if landed is None else int(landed)
-    state = SyncState(
-        last_synced_block=committed,
-        last_synced_block_date=prev.last_synced_block_date,
-        latest_block=committed,
-        latest_block_date=prev.latest_block_date,
-    )
-    store.commit(stream_name, state)
-    return state
+from dataengineering_spark.streaming.state import (
+    SyncStateStore,
+    commit_from_destination,
+)
 
 
 def streaming_sync_pipeline(

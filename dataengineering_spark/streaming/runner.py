@@ -3,10 +3,15 @@
 Reproduces the reference's hand-built sync loop as an engine
 component with Structured-Streaming semantics:
 
-1. ``check_sync_status`` — probe the source head, hold back
+1. ``check_sync_status`` — take the source head, hold back
    ``streaming_lag`` blocks (the unstable head-of-chain), clamp to
    ``batch_size`` (≙ maxOffsetsPerTrigger), gate on progress
-   (``airflow/bitquery.py:208-285``).
+   (``airflow/bitquery.py:208-285``). Outside a drain every call
+   probes the head. Inside ``run_to_head`` the head is drain-scoped,
+   like ``Trigger.AvailableNow``'s fixed target offset: the first
+   batch probes it, later batches reuse it, and only a batch that
+   finds the watermark at ``head - streaming_lag`` probes again — to
+   follow a head that moved during the drain, or to end the drain.
 2. run the user's batch transform over exactly the proposed
    ``(last_synced, latest]`` range and fan it out to sinks
    (``clickhouse/v1/operator.py:440-499``).
@@ -27,6 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataengineering_spark.streaming import state as sync_state
 from dataengineering_spark.streaming.state import SyncState, SyncStateStore
 
 
@@ -58,38 +64,40 @@ class IncrementalSyncRunner:
         self.spark = spark
         self.store = store
         self.config = config
+        # the head run_to_head drains to; None outside a drain
+        self._drain_head: float | None = None
 
     # -- T2: offset negotiation -----------------------------------------
 
+    def _probe_head(self, source: DataFrame) -> int:
+        """Max offset in the source, -1 when it is empty: one bounded
+        scalar collect (parquet row-group stats, not a scan)."""
+        head = source.agg(F.max(self.config.offset_col)).collect()[0][0]
+        return -1 if head is None else head
+
     def check_sync_status(self, source: DataFrame) -> SyncRange:
-        state = self.store.get(self.config.stream)
-        head_row = source.agg(
-            F.max(self.config.offset_col).alias("head")
-        ).collect()[0]
-        head = head_row.head if head_row.head is not None else -1
-        capped = min(
-            state.last_synced_block + self.config.batch_size,
-            head - self.config.streaming_lag,
-        )
-        return SyncRange(last_synced=state.last_synced_block, latest=capped)
+        last = self.store.get(self.config.stream).last_synced_block
+        head = self._drain_head
+        if head is None or last >= head - self.config.streaming_lag:
+            head = self._probe_head(source)
+            if self._drain_head is not None:
+                self._drain_head = head
+        capped = min(last + self.config.batch_size, head - self.config.streaming_lag)
+        return SyncRange(last_synced=last, latest=capped)
 
     def lag_gauge(self, source: DataFrame) -> DataFrame:
         """One-row metrics frame — the reportLatestOffset-style gauge
         a monitoring sink scrapes: how far behind the head this stream
         is and how many batch_size triggers the backlog represents.
         Union rows across runners for a fleet dashboard; write with
-        any sink.  The head probe is the same bounded scalar collect
-        check_sync_status performs (min/max over the offset column —
-        parquet row-group stats, not a scan).
+        any sink.  The gauge probes the head on every call, also
+        during a drain, so it stays live.
 
         Columns: stream, last_synced, head, effective_head (head minus
         the held-back streaming_lag), lag_blocks (0 when fully
         drained), backlog_batches (ceil(lag / batch_size))."""
         state = self.store.get(self.config.stream)
-        head_row = source.agg(
-            F.max(self.config.offset_col).alias("head")
-        ).collect()[0]
-        head = head_row.head if head_row.head is not None else -1
+        head = self._probe_head(source)
         effective = head - self.config.streaming_lag
         lag = max(0, effective - state.last_synced_block)
         backlog = -(-lag // self.config.batch_size)
@@ -142,17 +150,7 @@ class IncrementalSyncRunner:
     def commit_from_destination(self, destination_max: Callable[[], int | None]) -> SyncState:
         """Commit what landed, not what was attempted (reference
         ``set_latest_block``, ``airflow/bitquery.py:288-351``)."""
-        landed = destination_max()
-        prev = self.store.get(self.config.stream)
-        committed = prev.last_synced_block if landed is None else int(landed)
-        state = SyncState(
-            last_synced_block=committed,
-            last_synced_block_date=prev.last_synced_block_date,
-            latest_block=committed,
-            latest_block_date=prev.latest_block_date,
-        )
-        self.store.commit(self.config.stream, state)
-        return state
+        return sync_state.commit_from_destination(self.store, self.config.stream, destination_max)
 
     # -- drain loop ------------------------------------------------------
 
@@ -165,11 +163,28 @@ class IncrementalSyncRunner:
         max_batches: int = 1000,
     ) -> list[SyncRange]:
         """Drain the backlog in batch_size steps — the equivalent of
-        repeated scheduler runs of the reference DAG."""
+        repeated scheduler runs of the reference DAG.
+
+        The first batch probes the head and later batches reuse it.
+        Once the committed watermark reaches ``head - streaming_lag``,
+        the next batch probes again: a head that moved is drained
+        too, an unmoved one ends the drain. A batch that leaves the
+        watermark where it was raises instead of re-running its
+        range."""
         done: list[SyncRange] = []
-        for _ in range(max_batches):
-            rng = self.run_once(source, transform, sink, destination_max)
-            if rng is None:
-                break
-            done.append(rng)
+        self._drain_head = float("-inf")  # counts as reached: batch 1 probes
+        try:
+            for _ in range(max_batches):
+                rng = self.run_once(source, transform, sink, destination_max)
+                if rng is None:
+                    break
+                done.append(rng)
+                if self.store.get(self.config.stream).last_synced_block == rng.last_synced:
+                    raise RuntimeError(
+                        f"sync of {self.config.stream!r} stalled: batch "
+                        f"({rng.last_synced}, {rng.latest}] did not move the "
+                        "committed watermark, so the next batch would re-run it"
+                    )
+        finally:
+            self._drain_head = None
         return done

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 from dataclasses import asdict, dataclass
 from datetime import date
 
@@ -204,3 +205,25 @@ class TableSyncStateStore:
                 )
             )
         return out
+
+
+def commit_from_destination(
+    store: SyncStateStore | TableSyncStateStore,
+    stream: str,
+    destination_max: Callable[[], int | None],
+) -> SyncState:
+    """Commit what LANDED, not what was attempted (reference
+    ``set_latest_block``, ``airflow/bitquery.py:288-351``): the
+    watermark is re-derived from the destination so a sink failure
+    can never advance past the durable data."""
+    landed = destination_max()
+    prev = store.get(stream)
+    committed = prev.last_synced_block if landed is None else int(landed)
+    state = SyncState(
+        last_synced_block=committed,
+        last_synced_block_date=prev.last_synced_block_date,
+        latest_block=committed,
+        latest_block_date=prev.latest_block_date,
+    )
+    store.commit(stream, state)
+    return state

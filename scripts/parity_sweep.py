@@ -5,7 +5,7 @@ flushes out data-dependent greens — results that only match because of
 a coincidence of the sf0.01 corpus (the round-4 PQ empty-cluster
 hazard was exactly this class).
 
-Usage: python scripts/parity_sweep.py [sf_dir ...] [--artifact PATH]
+Usage: python scripts/parity_sweep.py [sf_dir ...] [--artifact PATH] [--trace]
 Defaults to sf0.001 and sf0.1. Prints one line per (sf, query) failure
 and a final summary; exit code 1 on any mismatch.
 
@@ -19,6 +19,7 @@ r13 medium).
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -29,7 +30,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 
-def run_sweep(sf_dirs: list[str]) -> int:
+def parse_args(argv: list[str]) -> argparse.Namespace:
+    """Positional sf dirs (empty list when none is given), ``--artifact
+    PATH`` or ``--artifact=PATH``, and ``--trace`` (print a traceback
+    per failure)."""
+    p = argparse.ArgumentParser(description="cross-sf oracle-parity sweep")
+    p.add_argument("sf_dirs", nargs="*")
+    p.add_argument("--artifact", help="write a CORRECTNESS_r*.json-format record here")
+    p.add_argument("--trace", action="store_true")
+    return p.parse_intermixed_args(argv)
+
+
+def run_sweep(sf_dirs: list[str], artifact: str | None = None, trace: bool = False) -> int:
     from dataengineering_spark.catalog import TESTDATA_TABLES
     from dataengineering_spark.plans.queries import QUERIES
     from dataengineering_spark.session import get_spark
@@ -55,16 +67,12 @@ def run_sweep(sf_dirs: list[str]) -> int:
                 msg = str(exc).splitlines()[0][:200] or type(exc).__name__
                 failures.append((sf_dir, name, msg))
                 print(f"FAIL {sf_dir} {name}: {msg}", flush=True)
-                if "--trace" in sys.argv:
+                if trace:
                     traceback.print_exc()
         print(f"{sf_dir}: {n_ok} ok, {len([f for f in failures if f[0] == sf_dir])} "
               f"failed in {time.time() - t0:.0f}s", flush=True)
         con.close()
     spark.stop()
-    artifact = None
-    for a in sys.argv[1:]:
-        if a.startswith("--artifact="):
-            artifact = a.split("=", 1)[1]
     if artifact:
         import json
 
@@ -93,8 +101,9 @@ def run_sweep(sf_dirs: list[str]) -> int:
 
 
 if __name__ == "__main__":
-    dirs = [a for a in sys.argv[1:] if not a.startswith("-")] or [
+    args = parse_args(sys.argv[1:])
+    dirs = args.sf_dirs or [
         "/root/testdata/sf0.001",
         "/root/testdata/sf0.1",
     ]
-    raise SystemExit(run_sweep(dirs))
+    raise SystemExit(run_sweep(dirs, args.artifact, args.trace))

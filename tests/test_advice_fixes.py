@@ -3,6 +3,8 @@ release, case-insensitive email redaction, asof reserved-name guard."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -50,6 +52,27 @@ def test_tracking_scope_releases_only_its_own(spark):
     assert outer.storageLevel.useMemory  # outer survived the scope
     assert tracked_count() == 1
     assert release_tracked() == 1
+
+
+def test_enrichment_pipeline_persist_is_released_by_scope(spark, tmp_path):
+    """enrichment_pipeline persists its token dimension; the persist
+    must be tracked so a tracking_scope around build + write releases
+    it. A private copy of the input keeps the cached plan unique to
+    this test."""
+    import shutil
+
+    from dataengineering_spark.caching import tracking_scope
+    from dataengineering_spark.plans.queries import q_enrichment_pipeline
+    from tests.conftest import SF_SMOKE
+
+    shutil.copy(os.path.join(SF_SMOKE, "events.parquet"), tmp_path / "events.parquet")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with tracking_scope():
+        df = q_enrichment_pipeline(spark, str(tmp_path))
+        df.write.format("noop").mode("overwrite").save()
+        assert jsc.getPersistentRDDs().size() > before
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_trailing_bucket_id_floors_negative_seconds(spark):

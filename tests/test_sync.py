@@ -46,6 +46,32 @@ def dest_tools(spark, tmp_path):
     return dest, sink, dest_max
 
 
+def memory_dest():
+    """In-memory destination: every synced block, in sink order."""
+    seen: list[int] = []
+
+    def sink(df):
+        seen.extend(r.block for r in df.collect())
+
+    def dest_max():
+        return max(seen) if seen else None
+
+    return seen, sink, dest_max
+
+
+def count_probes(runner, monkeypatch, head=None):
+    """Count _probe_head calls; ``head`` optionally replaces the probe."""
+    calls: list[int] = []
+    probe = head or runner._probe_head
+
+    def counted(source):
+        calls.append(1)
+        return probe(source)
+
+    monkeypatch.setattr(runner, "_probe_head", counted)
+    return calls
+
+
 def test_state_store_roundtrip(tmp_path):
     store = SyncStateStore(str(tmp_path))
     assert store.get("s").last_synced_block == -1  # initial sentinel
@@ -86,6 +112,73 @@ def test_run_to_head_drains_in_batches(spark, tmp_path, events):
     dest = read_any(spark, str(tmp_path / "dest"))
     assert dest.count() == 1000
     assert dest.select("block").distinct().count() == 1000  # no dupes
+
+
+def test_drain_probes_head_once_plus_final_gate(spark, tmp_path, monkeypatch):
+    """The head is drain-scoped: batch 1 probes it, batches 2-3 reuse
+    it, and one probe at the head closes the drain."""
+    runner, _ = make_runner(spark, tmp_path, batch_size=100)
+    probes = count_probes(runner, monkeypatch)
+    seen, sink, dest_max = memory_dest()
+    src = spark.range(300).select(F.col("id").alias("block"))
+    ranges = runner.run_to_head(src, lambda d: d, sink, dest_max)
+    assert [(r.last_synced, r.latest) for r in ranges] == [(-1, 99), (99, 199), (199, 299)]
+    assert len(probes) == 2
+    assert sorted(seen) == list(range(300))
+
+
+def test_drain_follows_head_that_moved(spark, tmp_path, monkeypatch):
+    """A probe that finds the head moved once the first head is
+    reached keeps the drain going to the new head."""
+    runner, store = make_runner(spark, tmp_path, batch_size=50, streaming_lag=10)
+
+    def moving_head(source):
+        return 159 if store.get("events").last_synced_block < 149 else 309
+
+    probes = count_probes(runner, monkeypatch, moving_head)
+    seen, sink, dest_max = memory_dest()
+    src = spark.range(310).select(F.col("id").alias("block"))
+    ranges = runner.run_to_head(src, lambda d: d, sink, dest_max)
+    assert [r.latest for r in ranges] == [49, 99, 149, 199, 249, 299]
+    assert len(probes) == 3  # first batch, first head reached, final gate
+    assert sorted(seen) == list(range(300))
+
+
+def test_probes_every_call_outside_a_drain(spark, tmp_path, monkeypatch):
+    """run_once and lag_gauge outside run_to_head stay live: one probe
+    per call, also after a drain has ended."""
+    runner, _ = make_runner(spark, tmp_path, batch_size=100)
+    probes = count_probes(runner, monkeypatch)
+    _, sink, dest_max = memory_dest()
+    src = spark.range(500).select(F.col("id").alias("block"))
+    runner.run_once(src, lambda d: d, sink, dest_max)
+    runner.run_once(src, lambda d: d, sink, dest_max)
+    runner.lag_gauge(src)
+    assert len(probes) == 3
+    runner.run_to_head(src, lambda d: d, sink, dest_max, max_batches=1)
+    runner.run_once(src, lambda d: d, sink, dest_max)
+    runner.run_once(src, lambda d: d, sink, dest_max)
+    assert len(probes) == 6
+
+
+def test_run_to_head_raises_on_stalled_batch(spark, tmp_path):
+    """A batch that lands nothing leaves the watermark where it was;
+    the drain names the stuck range instead of re-running it until
+    max_batches."""
+    runner, store = make_runner(spark, tmp_path, batch_size=100)
+    seen, sink, dest_max = memory_dest()
+    calls = {"n": 0}
+
+    def counting_sink(df):
+        calls["n"] += 1
+        sink(df)
+
+    src = spark.range(100).union(spark.range(500, 600)).select(F.col("id").alias("block"))
+    with pytest.raises(RuntimeError, match=r"\(99, 199\]"):
+        runner.run_to_head(src, lambda d: d, counting_sink, dest_max, max_batches=12)
+    assert calls["n"] == 2  # (-1, 99] then the empty (99, 199] once
+    assert store.get("events").last_synced_block == 99
+    assert sorted(seen) == list(range(100))
 
 
 def test_commit_from_destination_self_heals(spark, tmp_path, events):

@@ -23,8 +23,11 @@ FIXTURES.md §1.
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -774,364 +777,86 @@ def _register_extra_queries() -> None:
 _register_extra_queries()
 
 
-# The external correctness driver checks at most the FIRST 50 entries of
-# queries() per round, while the registry holds more.  Ordering is now
-# mechanical (see _ordered_names below): the committed DRIVER_LAST_GREEN map
-# (plans/driver_rounds.py, regenerated per round by
-# scripts/rebuild_driver_priority.py) records each query's last fully-green
-# driver round; queries sort red-first, then never-checked, then stalest
-# green.  _DRIVER_PRIORITY remains only as an optional manual override that
-# is prepended ahead of the mechanical order (normally empty).  Every query
-# stays covered by tests/test_oracle_parity.py regardless of this ordering.
-#
-# r14 pins: all 36 r13 v3-wash pins show green rows in CORRECTNESS_r13 and
-# are dropped.  Pinned now: the five r13 batch-3 rewrites whose last driver
-# green PREDATES the rewrite (they fell outside the rotated r13 window;
-# VERDICT r13 "Next round" #3) — the r13 restamp means they no longer rank
-# as drifted, so the pin is the only thing that forces them into the r14
-# window.  growth_accounting additionally carries this round's ADVICE-high
-# null-week semantics fix.  Remove once CORRECTNESS_r14 shows them green.
-_DRIVER_PRIORITY: list[str] = [
-    "sla_percentiles",
-    "growth_accounting",
-    "repetition_metrics",
-    "vocab_growth",
-    "rfm_segments",
-]
+# The external correctness driver checks only the FIRST 50 entries of
+# queries() per round; tests/test_oracle_parity.py checks all of them on
+# every run.  The window order is computed on each call from the
+# CORRECTNESS_r<N>.json ledgers the driver drops at the repo root, so
+# there is no generated map to go stale.
+_REPO_ROOT = Path(__file__).resolve().parents[2]
 
-# Package prefix for "our code" when walking a query callable's reference
-# closure.  Signature version: bumping this deliberately restamps every
-# query at the next rotate (a one-time reset of the drift ranking — the
-# known pre-bump gaps must be washed via _DRIVER_PRIORITY pins instead).
-_PKG_PREFIX = "dataengineering_spark"
-# v3 (r13): the closure walk also resolves function-body-local imports via
-# co_names dotted paths (ADVICE r12 medium) and _module_deps supplements
-# the globals scan with a static ast import pass so value-only imports
-# count (ADVICE r12 low).  Neither gap was exploited by any registry query
-# (verified: the only body-local-import consumer, dedup_clusters_forest,
-# was already covered through a module-level global of the same module),
-# so the version bump's wholesale restamp needs no wash pins.
-_SIG_VERSION = "v3"
-
-# name -> sha256 of the module's source file, memoized for the process.
-# Tests may pre-seed an entry to simulate an operator-module edit without
-# mutating the repo on disk.
-_MODULE_HASH_CACHE: dict[str, str] = {}
+# Hand-kept pins: query -> the round its code last changed.  Only a
+# driver green from that round on counts, so a pin expires by itself
+# once a newer ledger shows the query green.
+_EDITED_IN: dict[str, int] = {
+    # r14 optimization-round rewrites (VERDICT r14 #1)
+    "minhash_lsh": 14,
+    "dup_method_agreement": 14,
+    "dedup_clusters_forest": 14,
+    "blocking_quality": 14,
+    "ngram_novelty": 14,
+    "dsir_resample": 14,
+    "quantile_normalize": 14,
+    "semantic_reps_incremental": 14,
+    # tracked-persist release, after its r14 green
+    "enrichment_pipeline": 15,
+    # NULL-safe driver-gate sort for the quintile cuts
+    "rfm_segments": 15,
+}
 
 
-def _module_source_hash(mod_name: str) -> str | None:
-    """sha256 of a dataengineering_spark module's source file (memoized)."""
-    import hashlib
-    import sys
+def _window_order(
+    names: list[str],
+    ledgers: dict[int, dict[str, dict]],
+    edited_in: dict[str, int],
+) -> list[str]:
+    """Order ``names`` (registry order) by their driver evidence.
 
-    cached = _MODULE_HASH_CACHE.get(mod_name)
-    if cached is not None:
-        return cached
-    mod = sys.modules.get(mod_name)
-    if mod is None:
-        try:
-            import importlib
-
-            mod = importlib.import_module(mod_name)
-        except Exception:
-            return None
-    path = getattr(mod, "__file__", None)
-    if not path:
-        return None
-    try:
-        with open(path, "rb") as f:
-            digest = hashlib.sha256(f.read()).hexdigest()
-    except OSError:
-        return None
-    _MODULE_HASH_CACHE[mod_name] = digest
-    return digest
-
-
-def _module_ast_deps(mod_name: str) -> set[str]:
-    """Static import scan of a module's source (ADVICE r12 low #3).
-
-    The dynamic globals scan below misses dependencies pulled in as plain
-    DATA (``from other_op import SOME_CONST`` leaves no module object and
-    no __module__-tagged symbol in the importer's globals), so an edit to
-    the upstream module would not drift the consumer's v2 signature.  An
-    ast pass over the import statements closes that blind spot: every
-    ``import``/``from`` target resolving inside the package (absolute or
-    relative) counts as a dependency regardless of what kind of symbol was
-    imported.  Function-local imports are included too — they are real
-    dependencies of the module.
+    ``ledgers`` maps a round number to that round's CORRECTNESS rows.
+    Each query gets (last_green, last_checked) over all rounds.  Reds
+    come first: checked but never green, a later check that is not
+    green, or no green from its ``edited_in`` round on.  Never-checked
+    queries come next, then greens stalest first.  Ties break on
+    registry order.
     """
-    import ast
-    import sys
+    last_green: dict[str, int] = {}
+    last_checked: dict[str, int] = {}
+    for rnd, rows in ledgers.items():
+        for name, row in rows.items():
+            last_checked[name] = max(last_checked.get(name, -1), rnd)
+            if (
+                row.get("rows_match")
+                and row.get("schema_match")
+                and row.get("hash_match")
+                and not row.get("err")
+            ):
+                last_green[name] = max(last_green.get(name, -1), rnd)
 
-    mod = sys.modules.get(mod_name)
-    path = getattr(mod, "__file__", None) if mod is not None else None
-    if not path:
-        return set()
-    try:
-        with open(path, "r", encoding="utf-8") as fh:
-            tree = ast.parse(fh.read())
-    except (OSError, SyntaxError, ValueError):
-        return set()
-    pkg = getattr(mod, "__package__", None) or mod_name.rpartition(".")[0]
-    deps: set[str] = set()
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            for a in node.names:
-                if a.name.startswith(_PKG_PREFIX):
-                    deps.add(a.name)
-        elif isinstance(node, ast.ImportFrom):
-            base = node.module or ""
-            if node.level:
-                parts = pkg.split(".") if pkg else []
-                if node.level > 1:
-                    parts = parts[: len(parts) - (node.level - 1)]
-                base = ".".join(parts + ([node.module] if node.module else []))
-            if not base.startswith(_PKG_PREFIX):
-                continue
-            deps.add(base)
-            # ``from pkg.operators import dedup`` names the submodule in
-            # the alias list, not the module path — add it when it IS one
-            for a in node.names:
-                cand = f"{base}.{a.name}"
-                if cand in sys.modules:
-                    deps.add(cand)
-    return deps
+    def sort_key(name: str) -> tuple[int, int]:
+        green = last_green.get(name, -1)
+        checked = last_checked.get(name, -1)
+        if green < edited_in.get(name, -1):
+            return (0, 0)
+        if checked < 0:
+            return (1, 0)
+        if green < 0 or checked > green:
+            return (0, 0)
+        return (2, green)
+
+    # sorted() is stable, so equal keys keep registry order
+    return sorted(names, key=sort_key)
 
 
-def _module_deps(mod_name: str, _memo: dict[str, frozenset] = {}) -> frozenset:
-    """dataengineering_spark modules a module directly pulls symbols from.
-
-    Dynamic scan of the live module's globals (module objects and
-    __module__-tagged symbols) UNIONED with a static ast pass over the
-    source's import statements — the latter catches value-only imports
-    (constants, tables) that leave no traceable symbol in globals
-    (ADVICE r12).  Memoized: module-level import graphs only change with
-    a process restart.
-    """
-    import sys
-    import types
-
-    hit = _memo.get(mod_name)
-    if hit is not None:
-        return hit
-    mod = sys.modules.get(mod_name)
-    deps: set[str] = set()
-    if mod is not None:
-        for v in vars(mod).values():
-            if isinstance(v, types.ModuleType):
-                if v.__name__.startswith(_PKG_PREFIX):
-                    deps.add(v.__name__)
-            else:
-                m = getattr(v, "__module__", None)
-                if isinstance(m, str) and m.startswith(_PKG_PREFIX):
-                    deps.add(m)
-    deps.update(_module_ast_deps(mod_name))
-    deps.discard(mod_name)
-    deps.discard(_PKG_PREFIX)
-    out = frozenset(deps)
-    _memo[mod_name] = out
-    return out
-
-
-def _is_plans_module(mod_name: str) -> bool:
-    return f"{_PKG_PREFIX}.plans" == mod_name or mod_name.startswith(
-        f"{_PKG_PREFIX}.plans."
-    )
-
-
-def _callable_closure(fn) -> tuple[dict[str, str], set[str]]:
-    """(plans-layer helper sources, operator-module names) reachable from fn.
-
-    Walks the callable's code objects (including nested lambdas/closures):
-    every referenced global that resolves into dataengineering_spark is
-    either a plans-layer helper — whose SOURCE joins the signature and whose
-    own references are walked in turn — or an operator/functions/streaming/
-    sources symbol, whose defining MODULE joins the signature at module
-    granularity (per-function tracing below the plans layer is overkill;
-    module-source hash is the judged contract).  Plans-module sources are
-    deliberately NOT hashed whole: that would drift every query in a plan
-    file whenever any sibling query is edited.
-    """
-    import functools
-    import inspect
-    import types
-
-    helper_srcs: dict[str, str] = {}
-    modules: set[str] = set()
-    seen: set[str] = set()
-    stack = [fn]
-    while stack:
-        f = stack.pop()
-        # unwrap decorators / partials down to the underlying function
-        while True:
-            if isinstance(f, functools.partial):
-                f = f.func
-                continue
-            wrapped = getattr(f, "__wrapped__", None)
-            if wrapped is not None and wrapped is not f:
-                f = wrapped
-                continue
-            break
-        code = getattr(f, "__code__", None)
-        g = getattr(f, "__globals__", None)
-        if code is None or g is None:
-            continue
-        # referenced globals across the function and its nested code objects
-        names: set[str] = set()
-        cstack = [code]
-        while cstack:
-            c = cstack.pop()
-            names.update(c.co_names)
-            for const in c.co_consts:
-                if isinstance(const, types.CodeType):
-                    cstack.append(const)
-        # closure cells can carry our callables too (decorated helpers)
-        cells = []
-        closure = getattr(f, "__closure__", None)
-        if closure:
-            for cell in closure:
-                try:
-                    cells.append(cell.cell_contents)
-                except ValueError:
-                    pass
-        # function-body imports bind LOCALS, not globals, so the imported
-        # symbol never resolves through g — but the IMPORT_NAME opcode puts
-        # the dotted module path itself into co_names (ADVICE r12 medium).
-        # Resolve any package-prefixed dotted name as a module reference so
-        # a query whose only operator dependency is a body-local
-        # ``from dataengineering_spark.x import y`` still drifts on x edits.
-        for n in sorted(names):
-            if not n.startswith(_PKG_PREFIX) or n == _PKG_PREFIX:
-                continue
-            import sys as _sys
-
-            mod = _sys.modules.get(n)
-            if mod is None:
-                try:
-                    import importlib
-
-                    mod = importlib.import_module(n)
-                except Exception:
-                    continue
-            if _is_plans_module(n):
-                # a body-locally imported PLANS module enters by source
-                # hash under its own key: this over-drifts only the one
-                # importing query on sibling edits, never the whole file's
-                # queries (the reason plans modules stay out of `modules`)
-                digest = _module_source_hash(n)
-                if digest is not None:
-                    helper_srcs.setdefault(f"module:{n}", digest)
-            else:
-                modules.add(n)
-        for v in [g.get(n) for n in sorted(names) if n in g] + cells:
-            if isinstance(v, types.ModuleType):
-                if v.__name__.startswith(_PKG_PREFIX):
-                    modules.add(v.__name__)
-                continue
-            vmod = getattr(v, "__module__", None)
-            if not (isinstance(vmod, str) and vmod.startswith(_PKG_PREFIX)):
-                continue
-            if _is_plans_module(vmod):
-                key = f"{vmod}.{getattr(v, '__qualname__', repr(v))}"
-                if key in seen:
-                    continue
-                seen.add(key)
-                try:
-                    helper_srcs[key] = inspect.getsource(v)
-                except (OSError, TypeError):
-                    helper_srcs[key] = key
-                if callable(v) and not isinstance(v, type):
-                    stack.append(v)
-            else:
-                modules.add(vmod)
-    # transitive module closure: an operator module that itself imports
-    # from another operator module carries that dependency's drift too
-    frontier = list(modules)
-    while frontier:
-        for dep in _module_deps(frontier.pop()):
-            if dep not in modules and not _is_plans_module(dep):
-                modules.add(dep)
-                frontier.append(dep)
-    return helper_srcs, modules
-
-
-def _query_signature(name: str) -> str | None:
-    """Content signature of one registry query (v2): oracle SQL + callable
-    source + plans-layer helper sources + the source hash of every
-    dataengineering_spark operator module the callable transitively touches.
-
-    Stamped into driver_rounds.py at rotate time (the round's first action,
-    right after the driver ran the previous round's final commit — so the
-    stamp records the form the driver last checked).  _ordered_names ranks
-    a green query whose LIVE signature drifted from its stamp with the
-    reds: a driver green for code that no longer runs is not evidence.
-    v1 hashed only the SQL + callable source, which let operator-layer
-    rewrites (the r11 connected_components rework) slide under green stamps
-    (VERDICT r11 "What's missing" #1); v2 hashes the module closure.
-
-    Returns None when the callable's source is unavailable (source-less
-    deployment): the drift check is SKIPPED for such queries rather than
-    comparing a never-matching fallback string (ADVICE r11).
-    """
-    import hashlib
-    import inspect
-
-    spec = QUERIES[name]
-    try:
-        src = inspect.getsource(spec.fn)
-    except (OSError, TypeError):  # builtins / dynamically-built callables
-        return None
-    helper_srcs, modules = _callable_closure(spec.fn)
-    parts = [_SIG_VERSION, spec.sql or "", src]
-    parts.extend(f"{k}\x01{v}" for k, v in sorted(helper_srcs.items()))
-    for mod_name in sorted(modules):
-        digest = _module_source_hash(mod_name)
-        if digest is not None:
-            parts.append(f"{mod_name}={digest}")
-    payload = "\x00".join(parts)
-    return (
-        _SIG_VERSION
-        + ":"
-        + hashlib.sha256(payload.encode("utf-8")).hexdigest()
-    )
+def _read_ledgers() -> dict[int, dict[str, dict]]:
+    ledgers = {}
+    for path in _REPO_ROOT.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m:
+            ledgers[int(m.group(1))] = json.loads(path.read_text())
+    return ledgers
 
 
 def _ordered_names() -> list[str]:
-    from dataengineering_spark.plans import driver_rounds
-    from dataengineering_spark.plans.driver_rounds import DRIVER_HISTORY
-
-    stamps: dict[str, str] = getattr(driver_rounds, "DRIVER_SIGNATURES", {})
-
-    head = [n for n in _DRIVER_PRIORITY if n in QUERIES]
-    registry_pos = {n: i for i, n in enumerate(QUERIES)}
-
-    def sort_key(name: str) -> tuple[int, int]:
-        # red (never green, or most recent check not green — a live
-        # regression) -> -1: first.  never-checked -> 0: next.  green ->
-        # 1 + last green round: stalest first.  Ties break on registry
-        # order so the window stays deterministic round-to-round.
-        # A green whose implementation changed since its stamp (oracle SQL,
-        # callable source, or any operator module in the callable's closure
-        # differs from the rotate-time signature) is a red in disguise —
-        # its driver evidence describes code that no longer runs — and
-        # ranks with the reds.  A None live signature (source-less
-        # deployment) skips the drift check rather than never-matching.
-        hist = DRIVER_HISTORY.get(name)
-        if hist is None:
-            rank = 0
-        else:
-            last_green, last_checked = hist
-            rank = -1 if (last_green < 0 or last_checked > last_green) else 1 + last_green
-        if rank > 0:
-            stamp = stamps.get(name)
-            if stamp is not None:
-                live = _query_signature(name)
-                if live is not None and stamp != live:
-                    rank = -1
-        return (rank, registry_pos[name])
-
-    rest = sorted((n for n in QUERIES if n not in head), key=sort_key)
-    return head + rest
+    return _window_order(list(QUERIES), _read_ledgers(), _EDITED_IN)
 
 
 def get_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

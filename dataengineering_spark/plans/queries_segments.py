@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from dataengineering_spark.caching import persist_tracked
 from dataengineering_spark.catalog import read_table
-from dataengineering_spark.operators.robust import discrete_pcts
+from dataengineering_spark.operators.robust import _global_pct_order_key, discrete_pcts
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -301,7 +301,9 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = len(head)
         cuts = {}
         for m in metrics:
-            vals = sorted(int(r[m]) for r in head)
+            # NULL recency / money (a user whose every ts or value is
+            # NULL) sorts first, as in the distributed ORDER BY
+            vals = sorted((r[m] for r in head), key=_global_pct_order_key)
             cuts[m] = {
                 nm: (vals[int(p * (n - 1))] if n else 0)
                 for p, nm in zip(_RFM_PCTS, _RFM_NAMES)

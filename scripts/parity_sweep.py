@@ -11,10 +11,10 @@ and a final summary; exit code 1 on any mismatch.
 
 ``--artifact PATH`` additionally writes a CORRECTNESS_r*.json-format
 record ({name: {rows_match, schema_match, hash_match, err}} — green
-only when the query matched at EVERY swept sf) so
-``rebuild_driver_priority.py --restamp-verified=PATH`` has a
-machine-checked evidence chain instead of a hand-claimed one (ADVICE
-r13 medium).
+only when the query matched at EVERY swept sf): machine-checked
+evidence that an edited query still matches its oracle. It is not read
+by the driver-window order, which trusts only the driver's own
+CORRECTNESS ledgers and the ``_EDITED_IN`` pins in plans/queries.py.
 """
 
 from __future__ import annotations

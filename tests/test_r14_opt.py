@@ -14,19 +14,48 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_rfm_segments_driver_gate_matches_distributed(spark, monkeypatch):
-    """The rfm quintile-cut driver pull (<=_RFM_DRIVER_MAX users) must
-    produce the identical census as the unpivot + keyed discrete_pcts
-    pass (forced via threshold 0)."""
+def _rfm_both_branches(spark, monkeypatch, sf_dir):
     from dataengineering_spark.caching import release_tracked
     from dataengineering_spark.plans import queries_segments as qs
 
-    gated = _rows(qs.q_rfm_segments(spark, SF))
+    gated = _rows(qs.q_rfm_segments(spark, sf_dir))
     release_tracked()
     spark.catalog.clearCache()
-    monkeypatch.setattr(qs, "_RFM_DRIVER_MAX", 0)
-    distributed = _rows(qs.q_rfm_segments(spark, SF))
+    with monkeypatch.context() as m:
+        m.setattr(qs, "_RFM_DRIVER_MAX", 0)
+        distributed = _rows(qs.q_rfm_segments(spark, sf_dir))
     release_tracked()
+    return gated, distributed
+
+
+def test_rfm_segments_driver_gate_matches_distributed(spark, monkeypatch, tmp_path):
+    """The rfm quintile-cut driver pull (<=_RFM_DRIVER_MAX users) must
+    produce the identical census as the unpivot + keyed discrete_pcts
+    pass (forced via threshold 0), also when some users' every ``ts`` or
+    ``value`` is NULL (NULL recency / money sort first on both paths)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    gated, distributed = _rfm_both_branches(spark, monkeypatch, SF)
+    assert gated == distributed and len(gated) > 0
+
+    events = pq.read_table(f"{SF}/events.parquet")
+    uid = events.column("user_id").to_pylist()
+    null_ts = {u for u in uid if u % 7 == 0}
+    null_value = {u for u in uid if u % 5 == 0}
+    for col, nulled in (("ts", null_ts), ("value", null_value)):
+        field = events.schema.field(col)
+        vals = events.column(col).to_pylist()
+        events = events.set_column(
+            events.schema.get_field_index(col),
+            field,
+            pa.array(
+                [None if u in nulled else v for u, v in zip(uid, vals)],
+                field.type,
+            ),
+        )
+    pq.write_table(events, tmp_path / "events.parquet")
+    gated, distributed = _rfm_both_branches(spark, monkeypatch, str(tmp_path))
     assert gated == distributed and len(gated) > 0
 
 
@@ -40,30 +69,3 @@ def test_global_pct_gate_empty_frame(spark):
             df, "v", "uid", (0.5,), ("cut",), driver_threshold=thr
         )
         assert got == {"cut": None}
-
-
-def test_rebuild_script_loads_old_map_from_script_invocation():
-    """`python scripts/rebuild_driver_priority.py` runs with sys.path[0]
-    = scripts/, where the package import of the committed map used to
-    fail SILENTLY and bootstrap every stamp live (r14 laundering bug).
-    load_old_map must see the committed stamps from a bare script-style
-    process (cwd outside the repo, no conftest path help)."""
-    import subprocess
-    import sys
-
-    out = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            "import runpy; m = runpy.run_path("
-            "'/root/repo/scripts/rebuild_driver_priority.py',"
-            " run_name='loaded'); "
-            "ing, stamps = m['load_old_map'](); print(len(ing), len(stamps))",
-        ],
-        cwd="/",
-        capture_output=True,
-        text=True,
-        check=True,
-    )
-    n_rounds, n_stamps = map(int, out.stdout.split())
-    assert n_rounds >= 13 and n_stamps > 200, out.stdout

@@ -2,8 +2,8 @@
 columns with typed metadata (north-star surface; no reference
 equivalent).
 
-The Spark-side machinery — schemas, Arrow-batched mapInPandas
-pipelines, partition sizing — is real and tested. Decode status by
+The Spark-side machinery — schemas, the Arrow-batched per-row lane,
+partition sizing — is real and tested. Decode status by
 modality: PNG images decode for REAL via a pure-stdlib decoder
 (``decode_png``: zlib inflate + scanline unfilter, oracle-checked by
 the ``image_decode`` registry query); WAV/MP4 container headers parse
@@ -14,7 +14,9 @@ stays stubbed (codec libraries are not in this container) behind the
 same injectable-decoder seam the tests use.
 
 Scale posture: media bytes travel as Arrow binary batches through
-``mapInPandas`` (never collected, never exploded per-pixel);
+``udf_registry.map_rows`` — the one per-row lane every decode below
+runs on, each supplying only a per-row kernel and an output schema
+(never collected, never exploded per-pixel);
 ``media_budget_partitions`` sizes partitions by *bytes*, not rows,
 because a partition of 4k-row × 5 MB videos is 20 GB — row-count
 partitioning is the classic OOM here.
@@ -22,13 +24,13 @@ partitioning is the classic OOM here.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-
-import pandas as pd
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from dataengineering_spark.functions.udf_registry import map_rows
 
 # Typed metadata struct carried alongside every media payload.
 MEDIA_META_SCHEMA = T.StructType(
@@ -237,7 +239,7 @@ def media_durations(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """(doc_id, format, duration_ms) for WAV/MP4 payloads via
-    Arrow-batched mapInPandas over the header parsers above — the
+    the per-row Arrow lane over the header parsers above — the
     decode stage of the multimodal pipeline with the *container*
     portion implemented for real (sample/codec decode stays stubbed
     behind decode_images). Unknown formats yield null duration."""
@@ -245,18 +247,12 @@ def media_durations(
         "format", sniff_format(payload_col)
     )
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, fmt in zip(
-                pdf[id_col], pdf[payload_col], pdf["format"]
-            ):
-                parser = _DURATION_PARSERS.get(fmt)
-                dur = parser(bytes(payload)) if parser else None
-                rows.append((int(doc_id), fmt, dur))
-            yield pd.DataFrame(rows, columns=["doc_id", "format", "duration_ms"])
+    def _parse(doc_id, payload, fmt):
+        parser = _DURATION_PARSERS.get(fmt)
+        dur = parser(bytes(payload)) if parser else None
+        yield (int(doc_id), fmt, dur)
 
-    return fmt_df.mapInPandas(_parse, schema=DURATIONS_SCHEMA)
+    return map_rows(fmt_df, _parse, DURATIONS_SCHEMA)
 
 
 def parse_jpeg_dimensions(b: bytes) -> "tuple[int, int] | None":
@@ -338,27 +334,19 @@ def image_dimensions(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """(doc_id, format, width, height) for PNG/JPEG payloads via
-    Arrow-batched mapInPandas over the header parsers — image geometry
+    the per-row Arrow lane over the header parsers — image geometry
     without any decode library. Unknown formats yield null dims."""
     fmt_df = df.select(id_col, payload_col).withColumn(
         "format", sniff_format(payload_col)
     )
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, fmt in zip(
-                pdf[id_col], pdf[payload_col], pdf["format"]
-            ):
-                parser = _DIMENSION_PARSERS.get(fmt)
-                dims = parser(bytes(payload)) if parser else None
-                w, h = dims if dims else (None, None)
-                rows.append((int(doc_id), fmt, w, h))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "format", "width", "height"]
-            )
+    def _parse(doc_id, payload, fmt):
+        parser = _DIMENSION_PARSERS.get(fmt)
+        dims = parser(bytes(payload)) if parser else None
+        w, h = dims if dims else (None, None)
+        yield (int(doc_id), fmt, w, h)
 
-    return fmt_df.mapInPandas(_parse, schema=DIMENSIONS_SCHEMA)
+    return map_rows(fmt_df, _parse, DIMENSIONS_SCHEMA)
 
 
 def make_test_mp4(duration_ms: int, timescale: int = 1000) -> bytes:
@@ -398,9 +386,9 @@ def sample_frames(
     from the MP4 box walk, midpoint-rule timestamps
     ``ts_i = ((2i+1)·duration_ms) // (2k)`` (always strictly inside
     the clip), one output row per sampled frame — the frame-extraction
-    stage of a video training pipeline as an Arrow-batched per-frame
-    fan-out.  The pixel decode itself is a DETERMINISTIC STUB (md5 of
-    ``"{id}:{ts}"``) because no codec library exists in this
+    stage of a video training pipeline as a per-frame fan-out on the
+    per-row Arrow lane.  The pixel decode itself is a DETERMINISTIC
+    STUB (md5 of ``"{id}:{ts}"``) because no codec library exists in this
     environment; the Spark-side plumbing — schema, batching, row
     fan-out, timestamp math — is real, and the stub is the documented
     seam where a real decoder plugs in.  Payloads whose container
@@ -411,26 +399,18 @@ def sample_frames(
         "format", sniff_format(payload_col)
     )
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, fmt in zip(
-                pdf[id_col], pdf[payload_col], pdf["format"]
-            ):
-                parser = _DURATION_PARSERS.get(fmt)
-                dur = parser(bytes(payload)) if parser else None
-                if dur is None:
-                    continue
-                doc_id = int(doc_id)
-                for i in range(n_frames):
-                    ts = ((2 * i + 1) * dur) // (2 * n_frames)
-                    fid = hashlib.md5(f"{doc_id}:{ts}".encode()).hexdigest()
-                    rows.append((doc_id, i, ts, fid))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "frame_ts_ms", "frame_id"]
-            )
+    def _sample(doc_id, payload, fmt):
+        parser = _DURATION_PARSERS.get(fmt)
+        dur = parser(bytes(payload)) if parser else None
+        if dur is None:
+            return
+        doc_id = int(doc_id)
+        for i in range(n_frames):
+            ts = ((2 * i + 1) * dur) // (2 * n_frames)
+            fid = hashlib.md5(f"{doc_id}:{ts}".encode()).hexdigest()
+            yield (doc_id, i, ts, fid)
 
-    return fmt_df.mapInPandas(_sample, schema=FRAME_SAMPLE_SCHEMA)
+    return map_rows(fmt_df, _sample, FRAME_SAMPLE_SCHEMA)
 
 
 PNG_SIGNATURE = bytes.fromhex("89504e470d0a1a0a")
@@ -640,37 +620,25 @@ def decode_images(
     id_col: str = "doc_id",
     payload_col: str = "payload",
     decoder: Callable[[bytes], dict] = default_decoder,
-    batch_size_hint: int = 64,
 ) -> DataFrame:
-    """Decode/feature-extract image payloads via Arrow-batched
-    mapInPandas. ``decoder(payload_bytes) -> {width, height,
-    mean_luma, feature: list[float]}``.
+    """Decode/feature-extract image payloads on the per-row Arrow
+    lane. ``decoder(payload_bytes) -> {width, height, mean_luma,
+    feature: list[float]}``.
 
-    The per-batch loop is the ONLY Python hot path in the module and
-    it touches each payload exactly once; everything before/after is
-    JVM-side."""
+    The kernel touches each payload exactly once; everything
+    before/after is JVM-side."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = decoder(bytes(payload))
-                out.append(
-                    (
-                        int(doc_id),
-                        int(d["width"]),
-                        int(d["height"]),
-                        float(d["mean_luma"]),
-                        [float(x) for x in d["feature"]],
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "mean_luma", "feature"]
-            )
+    def _decode(doc_id, payload):
+        d = decoder(bytes(payload))
+        yield (
+            int(doc_id),
+            int(d["width"]),
+            int(d["height"]),
+            float(d["mean_luma"]),
+            [float(x) for x in d["feature"]],
+        )
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _decode, schema=IMAGE_FEATURES_SCHEMA
-    )
+    return map_rows(df.select(id_col, payload_col), _decode, IMAGE_FEATURES_SCHEMA)
 
 
 def frame_sample_plan(
@@ -681,7 +649,8 @@ def frame_sample_plan(
 ) -> DataFrame:
     """Expand each video row into (doc_id, frame_ts_ms) sample points
     — pure JVM sequence explode; the actual frame grab would be a
-    decode_images-style mapInPandas over (payload, frame_ts_ms)."""
+    per-row kernel over (payload, frame_ts_ms) on ``map_rows``, the
+    one per-row lane every decode in this module runs on."""
     return df.select(
         id_col,
         F.explode(
@@ -741,8 +710,8 @@ def pcm_features(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, n_samples, peak_abs, zero_crossings, rms_milli) per WAV
-    payload — REAL sample decode, numpy-vectorized inside Arrow
-    batches (``mapInPandas``), no codec library.
+    payload — REAL sample decode, numpy-vectorized per row on the
+    per-row Arrow lane (``map_rows``), no codec library.
 
     Determinism: sums of squares accumulate in int64 (exact), and
     IEEE-754 sqrt is correctly rounded, so ``floor(rms * 1000)`` is
@@ -761,30 +730,24 @@ def pcm_features(
         ]
     )
 
-    def _extract(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
-                span = _wav_data_span(bytes(payload)) if payload is not None else None
-                if span is None:
-                    rows.append((rid, 0, 0, 0, 0))
-                    continue
-                off, size = span
-                x = np.frombuffer(
-                    payload, dtype="<i2", count=size // 2, offset=off
-                ).astype(np.int64)
-                if x.size == 0:
-                    rows.append((rid, 0, 0, 0, 0))
-                    continue
-                ss = int((x * x).sum())
-                rms = (ss / x.size) ** 0.5
-                zc = int(((x[:-1] * x[1:]) < 0).sum())
-                rows.append(
-                    (rid, int(x.size), int(np.abs(x).max()), zc, int(rms * 1000))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+    def _extract(rid, payload):
+        span = _wav_data_span(bytes(payload)) if payload is not None else None
+        if span is None:
+            yield (rid, 0, 0, 0, 0)
+            return
+        off, size = span
+        x = np.frombuffer(
+            payload, dtype="<i2", count=size // 2, offset=off
+        ).astype(np.int64)
+        if x.size == 0:
+            yield (rid, 0, 0, 0, 0)
+            return
+        ss = int((x * x).sum())
+        rms = (ss / x.size) ** 0.5
+        zc = int(((x[:-1] * x[1:]) < 0).sum())
+        yield (rid, int(x.size), int(np.abs(x).max()), zc, int(rms * 1000))
 
-    return df.mapInPandas(_extract, schema=out_schema)
+    return map_rows(df.select(id_col, payload_col), _extract, out_schema)
 
 
 def make_gradient_png(width: int, height: int, seed: int) -> bytes:
@@ -857,7 +820,7 @@ def resize_images_nearest(
     id_col: str = "doc_id",
     payload_col: str = "payload",
 ) -> DataFrame:
-    """Batch image resize over Arrow-batched mapInPandas — the
+    """Batch image resize over the per-row Arrow lane — the
     feature-extraction preprocessing step (thumbnail / patch grid) of
     a multimodal training pipeline. Output: (id, width, height,
     pixels) with ``pixels`` the resized RGB values as a comma-joined
@@ -865,20 +828,14 @@ def resize_images_nearest(
     engines). Partitioning, batch shape, and the binary Arrow lane
     all match decode_images; only the per-payload kernel differs."""
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                w, h, pix = resize_nearest(bytes(payload), out_w, out_h)
-                out.append(
-                    (int(doc_id), w, h, ",".join(str(v) for v in pix))
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "pixels"]
-            )
+    def _resize(doc_id, payload):
+        w, h, pix = resize_nearest(bytes(payload), out_w, out_h)
+        yield (int(doc_id), w, h, ",".join(str(v) for v in pix))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _resize, schema="doc_id long, width long, height long, pixels string"
+    return map_rows(
+        df.select(id_col, payload_col),
+        _resize,
+        "doc_id long, width long, height long, pixels string",
     )
 
 
@@ -926,23 +883,18 @@ def dhash_images(
     id_col: str = "doc_id",
     payload_col: str = "payload",
 ) -> DataFrame:
-    """(id, dhash) perceptual hashes over the Arrow-batched decode
-    lane — same partitioning/batch shape as decode_images, kernel is
+    """(id, dhash) perceptual hashes over the per-row Arrow lane —
+    same partitioning/batch shape as decode_images, kernel is
     ``dhash_image``. Feed the result to
     ``operators.dedup.simhash_neardup_pairs(..., sim_col='dhash',
     bits=64)`` for banded image near-dup pairing (the pigeonhole
     chunk join — never all-pairs)."""
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                (int(doc_id), dhash_image(bytes(payload)))
-                for doc_id, payload in zip(pdf[id_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame(out, columns=[id_col, "dhash"])
+    def _hash(doc_id, payload):
+        yield (int(doc_id), dhash_image(bytes(payload)))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _hash, schema=f"`{id_col}` long, dhash long"
+    return map_rows(
+        df.select(id_col, payload_col), _hash, f"`{id_col}` long, dhash long"
     )
 
 
@@ -1006,22 +958,17 @@ def audio_fingerprints(
     id_col: str = "doc_id",
     payload_col: str = "payload",
 ) -> DataFrame:
-    """(id, afp) perceptual audio fingerprints over the Arrow-batched
-    decode lane — the audio counterpart of ``dhash_images``. Feed to
+    """(id, afp) perceptual audio fingerprints over the per-row Arrow
+    lane — the audio counterpart of ``dhash_images``. Feed to
     ``operators.dedup.simhash_neardup_pairs(..., sim_col='afp',
     bits=64)`` for banded near-dup pairing (pigeonhole chunk join,
     never all-pairs)."""
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                (int(doc_id), audio_fingerprint(bytes(payload)))
-                for doc_id, payload in zip(pdf[id_col], pdf[payload_col])
-            ]
-            yield pd.DataFrame(out, columns=[id_col, "afp"])
+    def _hash(doc_id, payload):
+        yield (int(doc_id), audio_fingerprint(bytes(payload)))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _hash, schema=f"`{id_col}` long, afp long"
+    return map_rows(
+        df.select(id_col, payload_col), _hash, f"`{id_col}` long, afp long"
     )
 
 
@@ -1132,20 +1079,18 @@ def video_frame_hashes(
     State cost: ``n_samples`` longs per video. Unparsable containers
     produce no rows."""
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                frames = parse_video_frames(bytes(payload))
-                nf = len(frames)
-                if nf == 0:
-                    continue
-                doc_id = int(doc_id)
-                for i in range(n_samples):
-                    idx = ((2 * i + 1) * nf) // (2 * n_samples)
-                    rows.append((doc_id, i, dhash_image(frames[idx])))
-            yield pd.DataFrame(rows, columns=[id_col, "slot", "dhash"])
+    def _hash(doc_id, payload):
+        frames = parse_video_frames(bytes(payload))
+        nf = len(frames)
+        if nf == 0:
+            return
+        doc_id = int(doc_id)
+        for i in range(n_samples):
+            idx = ((2 * i + 1) * nf) // (2 * n_samples)
+            yield (doc_id, i, dhash_image(frames[idx]))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _hash, schema=f"`{id_col}` long, slot int, dhash long"
+    return map_rows(
+        df.select(id_col, payload_col),
+        _hash,
+        f"`{id_col}` long, slot int, dhash long",
     )

@@ -16,7 +16,7 @@ Python (model scoring, dynamic-width pivots, third-party libs).
 from __future__ import annotations
 
 import warnings
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 import pandas as pd
 
@@ -52,6 +52,28 @@ def transform_batches(
             yield fn(pdf)
 
     return df.mapInPandas(_apply, schema=schema)
+
+
+def map_rows(
+    df: DataFrame,
+    fn: Callable[..., Iterable[tuple]],
+    schema: T.StructType | str,
+) -> DataFrame:
+    """Per-row Python kernel over Arrow batches — the one lane the
+    multimodal tier (synth payloads, container parses, decodes) runs
+    its row-level work through. ``fn(*row)`` is called with each input
+    row's values in column order and returns the output tuples for
+    that row, in ``schema`` column order: zero, one or many. Callers
+    never see the pandas batch format."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    columns = schema.fieldNames()
+
+    def _rows(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = [o for row in pdf.itertuples(index=False, name=None) for o in fn(*row)]
+        return pd.DataFrame(out, columns=columns)
+
+    return transform_batches(df, _rows, schema)
 
 
 def warn_if_expressible(op_name: str) -> None:
@@ -97,12 +119,13 @@ def grouped_agg_udaf(
     out_col: str = "agg_value",
 ):
     """Series-to-scalar pandas UDAF (``PandasUDFType.GROUPED_AGG``
-    semantics) — the third Arrow escape hatch next to grouped_apply
-    (frame→frame) and transform_batches (batch→batch). For custom
-    scalar reductions a native expression can't state (a third-party
-    statistic, a model-based score). Arrow-vectorized per group; the
-    same expressibility policy applies — shipped aggregations must
-    use operators/aggregates.py instead.
+    semantics) — the Arrow escape hatch next to grouped_apply
+    (frame→frame), transform_batches (batch→batch) and map_rows
+    (row→rows). For custom scalar reductions a native expression
+    can't state (a third-party statistic, a model-based score).
+    Arrow-vectorized per group; the same expressibility policy
+    applies — shipped aggregations must use operators/aggregates.py
+    instead.
 
     Unlike applyInPandas, a grouped-agg UDF composes with other
     aggregate expressions in one ``agg()`` and rides Spark's hash

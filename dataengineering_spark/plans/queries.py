@@ -801,6 +801,19 @@ _EDITED_IN: dict[str, int] = {
     "enrichment_pipeline": 15,
     # NULL-safe driver-gate sort for the quintile cuts
     "rfm_segments": 15,
+    # synth and decode lanes moved onto udf_registry.map_rows
+    "media_durations": 15,
+    "image_decode": 15,
+    "image_resize": 15,
+    "image_neardup": 15,
+    "image_dedup_survivors": 15,
+    "image_bucket_accounting": 15,
+    "image_verify_rate": 15,
+    "audio_neardup": 15,
+    "video_neardup": 15,
+    "jpeg_meta": 15,
+    "frame_sample": 15,
+    "pcm_stats": 15,
 }
 
 

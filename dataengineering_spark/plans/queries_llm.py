@@ -15,6 +15,7 @@ Cross-engine notes baked into the oracles:
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -32,6 +33,7 @@ from dataengineering_spark.functions.text import (
     stopword_count,
     word_count,
 )
+from dataengineering_spark.functions.udf_registry import map_rows
 from dataengineering_spark.operators.dedup import (
     MINHASH_PRIME,
     connected_components,
@@ -1371,54 +1373,55 @@ FROM documents
 """
 
 
+def _media_docs(
+    spark: SparkSession, sf_dir: str, payload: Callable[[int], bytes]
+) -> DataFrame:
+    """(doc_id long, payload binary) with ``payload(doc_id)`` as each
+    document's bytes — the synthesized corpus every media query below
+    decodes; the payload formulas are closed forms the oracles replay."""
+    # fan the Python synth lane across cores: the sf docs table is a
+    # single small parquet file (one scan task), and the per-row synth
+    # is expensive — scale-adaptive no-op when splits >= cores
+    docs = spread_for_compute(_docs(spark, sf_dir).select("doc_id"))
+
+    def _row(doc_id):
+        doc_id = int(doc_id)
+        yield (doc_id, payload(doc_id))
+
+    return map_rows(docs, _row, "doc_id long, payload binary")
+
+
 # ===========================================================================
 # Q: media_durations — end-to-end binary container pipeline: synthesize
 # a canonical WAV per document (byte_rate/data_size are closed-form
 # functions of doc_id), then run the REAL path — binary payload →
-# magic-byte sniff → header parse in Arrow-batched mapInPandas. The
+# magic-byte sniff → header parse on the per-row Arrow lane. The
 # oracle recomputes the duration from the same closed form, so a bug
 # anywhere in the binary plumbing (byte order, chunk offsets, Arrow
 # binary transfer) breaks the match.
 # ===========================================================================
 
 def q_media_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from collections.abc import Iterator
-
     from dataengineering_spark.functions.multimodal import media_durations
 
-    # fan the Python synth lane across cores: the sf docs table is a
-    # single small parquet file (one scan task), and mapInPandas work
-    # is per-row expensive — scale-adaptive no-op when splits >= cores
-    docs = spread_for_compute(_docs(spark, sf_dir).select("doc_id"))
+    def wav_header(doc_id: int) -> bytes:
+        byte_rate = 8000 + (doc_id % 7) * 1000
+        data_size = 16000 + (doc_id % 11) * 800
+        fmt_body = (
+            (1).to_bytes(2, "little")
+            + (1).to_bytes(2, "little")
+            + (byte_rate // 2).to_bytes(4, "little")
+            + byte_rate.to_bytes(4, "little")
+            + (2).to_bytes(2, "little")
+            + (16).to_bytes(2, "little")
+        )
+        chunks = (
+            b"fmt " + len(fmt_body).to_bytes(4, "little") + fmt_body
+            + b"data" + data_size.to_bytes(4, "little") + b"\x00" * 8
+        )
+        return b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
 
-    def _synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                byte_rate = 8000 + (doc_id % 7) * 1000
-                data_size = 16000 + (doc_id % 11) * 800
-                fmt_body = (
-                    (1).to_bytes(2, "little")
-                    + (1).to_bytes(2, "little")
-                    + (byte_rate // 2).to_bytes(4, "little")
-                    + byte_rate.to_bytes(4, "little")
-                    + (2).to_bytes(2, "little")
-                    + (16).to_bytes(2, "little")
-                )
-                chunks = (
-                    b"fmt " + len(fmt_body).to_bytes(4, "little") + fmt_body
-                    + b"data" + data_size.to_bytes(4, "little") + b"\x00" * 8
-                )
-                payload = (
-                    b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks
-                )
-                rows.append((doc_id, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    synthesized = docs.mapInPandas(_synth, schema="doc_id long, payload binary")
-    return media_durations(synthesized)
+    return media_durations(_media_docs(spark, sf_dir, wav_header))
 
 
 SQL_MEDIA_DURATIONS = """
@@ -1433,42 +1436,28 @@ FROM documents
 # Q: image_decode — REAL image decode end-to-end: synthesize a valid
 # solid-color PNG per document (size/color are closed-form functions
 # of doc_id), run the actual decode path — zlib inflate + scanline
-# unfilter in Arrow-batched mapInPandas — and emit per-channel means.
+# unfilter on the per-row Arrow lane — and emit per-channel means.
 # The oracle recomputes everything from the closed form, so a bug in
 # PNG chunk walking, inflate, unfiltering, channel accumulation, or
 # the Arrow binary/float transfer breaks the match.
 # ===========================================================================
 
 def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from collections.abc import Iterator
-
     from dataengineering_spark.functions.multimodal import (
         decode_images,
         make_solid_png,
     )
 
-    # fan the Python synth lane across cores: the sf docs table is a
-    # single small parquet file (one scan task), and mapInPandas work
-    # is per-row expensive — scale-adaptive no-op when splits >= cores
-    docs = spread_for_compute(_docs(spark, sf_dir).select("doc_id"))
+    def solid_png(doc_id: int) -> bytes:
+        w, h = 8 + doc_id % 5, 8 + doc_id % 3
+        rgb = (
+            (doc_id * 37) % 256,
+            (doc_id * 59) % 256,
+            (doc_id * 83) % 256,
+        )
+        return make_solid_png(w, h, rgb)
 
-    def _synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 8 + doc_id % 5, 8 + doc_id % 3
-                rgb = (
-                    (doc_id * 37) % 256,
-                    (doc_id * 59) % 256,
-                    (doc_id * 83) % 256,
-                )
-                rows.append((doc_id, make_solid_png(w, h, rgb)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    synthesized = docs.mapInPandas(_synth, schema="doc_id long, payload binary")
-    feats = decode_images(synthesized)
+    feats = decode_images(_media_docs(spark, sf_dir, solid_png))
     # mean channels are exact small integers, so the float32 feature
     # lanes round-trip to double exactly.
     return feats.select(
@@ -1507,32 +1496,17 @@ FROM documents
 # ===========================================================================
 
 def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from collections.abc import Iterator
-
     from dataengineering_spark.functions.multimodal import (
         make_gradient_png,
         resize_images_nearest,
     )
 
-    # fan the Python synth lane across cores: the sf docs table is a
-    # single small parquet file (one scan task), and mapInPandas work
-    # is per-row expensive — scale-adaptive no-op when splits >= cores
-    docs = spread_for_compute(_docs(spark, sf_dir).select("doc_id"))
+    def gradient_png(doc_id: int) -> bytes:
+        w, h = 8 + doc_id % 5, 8 + doc_id % 3
+        return make_gradient_png(w, h, doc_id % 251)
 
-    def _synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 8 + doc_id % 5, 8 + doc_id % 3
-                rows.append(
-                    (doc_id, make_gradient_png(w, h, doc_id % 251))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    synthesized = docs.mapInPandas(_synth, schema="doc_id long, payload binary")
-    return resize_images_nearest(synthesized, out_w=4, out_h=4)
+    docs = _media_docs(spark, sf_dir, gradient_png)
+    return resize_images_nearest(docs, out_w=4, out_h=4)
 
 
 SQL_IMAGE_RESIZE = """
@@ -1572,52 +1546,35 @@ def _image_dhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, dhash) — the shared front of the image-modality queries
     (image_neardup / image_dedup_survivors / image_bucket_accounting).
     """
-    import pandas as pd
-    from collections.abc import Iterator
-
+    from dataengineering_spark.caching import persist_tracked
     from dataengineering_spark.functions.multimodal import (
         dhash_images,
         make_diag_png,
     )
 
-    # fan the Python synth lane across cores: the sf docs table is a
-    # single small parquet file (one scan task), and mapInPandas work
-    # is per-row expensive — scale-adaptive no-op when splits >= cores
-    docs = spread_for_compute(_docs(spark, sf_dir).select("doc_id"))
+    def diag_png(doc_id: int) -> bytes:
+        # per-group (w, h, s, ax, ay) tuple over the DIAGONAL
+        # gradient builder: parameterized slopes give every
+        # group a distinct luma field, so the corpus's hash
+        # entropy scales with the corpus (the fixed-slope
+        # family collapsed to ~100 row-replicated patterns and
+        # its pair volume exploded quadratically at sf0.1 —
+        # measured 639k pairs; this form: ~10k). The third
+        # group member is 1px wider, so the floor downsample
+        # shifts a few sampled columns -> hamming in the 1..3
+        # near-dup radius for some groups, beyond it for others
+        grp = doc_id // 3
+        w = 72 + grp % 31 + (1 if doc_id % 3 == 2 else 0)
+        h = 12 + grp % 7
+        return make_diag_png(
+            w, h, (grp * 97) % 251,
+            1 + (grp * 7) % 113, (grp * 13) % 251,
+        )
 
-    def _synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                # per-group (w, h, s, ax, ay) tuple over the DIAGONAL
-                # gradient builder: parameterized slopes give every
-                # group a distinct luma field, so the corpus's hash
-                # entropy scales with the corpus (the fixed-slope
-                # family collapsed to ~100 row-replicated patterns and
-                # its pair volume exploded quadratically at sf0.1 —
-                # measured 639k pairs; this form: ~10k). The third
-                # group member is 1px wider, so the floor downsample
-                # shifts a few sampled columns -> hamming in the 1..3
-                # near-dup radius for some groups, beyond it for others
-                grp = doc_id // 3
-                w = 72 + grp % 31 + (1 if doc_id % 3 == 2 else 0)
-                h = 12 + grp % 7
-                rows.append(
-                    (doc_id, make_diag_png(
-                        w, h, (grp * 97) % 251,
-                        1 + (grp * 7) % 113, (grp * 13) % 251,
-                    ))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    from dataengineering_spark.caching import persist_tracked
-
-    synthesized = docs.mapInPandas(_synth, schema="doc_id long, payload binary")
     # persist: the pigeonhole self-join reads the fingerprint frame on
     # BOTH aliases — unpersisted, each side re-runs the whole Python
     # synth+decode lane (measured 2x the query cost at sf0.1)
-    return persist_tracked(dhash_images(synthesized))
+    return persist_tracked(dhash_images(_media_docs(spark, sf_dir, diag_png)))
 
 
 def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1856,40 +1813,25 @@ def _audio_fp_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesized PCM-ramp WAV corpus → 63-bit two-band fingerprint
     frame (doc_id, afp) — the shared front of the audio-modality
     queries and the sf-scale capped probes."""
-    import pandas as pd
-    from collections.abc import Iterator
-
+    from dataengineering_spark.caching import persist_tracked
     from dataengineering_spark.functions.multimodal import (
         audio_fingerprints,
         make_test_wav,
     )
 
-    # fan the Python synth lane across cores: the sf docs table is a
-    # single small parquet file (one scan task), and mapInPandas work
-    # is per-row expensive — scale-adaptive no-op when splits >= cores
-    docs = spread_for_compute(_docs(spark, sf_dir).select("doc_id"))
+    def ramp_wav(doc_id: int) -> bytes:
+        grp = doc_id // 3
+        # multiplied residues widen the (a, n) pattern space so
+        # cross-group fingerprint collisions stay near-linear
+        # in the corpus (65k -> 45k pairs at sf0.1 measured)
+        a = 3 + (grp * 5) % 61
+        b = grp % 101 + (3 if doc_id % 3 == 2 else 0)
+        n = 192 + (grp * 17) % 131
+        samples = [((a * (t + 1) + b) % 201) - 100 for t in range(n)]
+        return make_test_wav(samples)
 
-    def _synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                grp = doc_id // 3
-                # multiplied residues widen the (a, n) pattern space so
-                # cross-group fingerprint collisions stay near-linear
-                # in the corpus (65k -> 45k pairs at sf0.1 measured)
-                a = 3 + (grp * 5) % 61
-                b = grp % 101 + (3 if doc_id % 3 == 2 else 0)
-                n = 192 + (grp * 17) % 131
-                samples = [((a * (t + 1) + b) % 201) - 100 for t in range(n)]
-                rows.append((doc_id, make_test_wav(samples)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    from dataengineering_spark.caching import persist_tracked
-
-    synthesized = docs.mapInPandas(_synth, schema="doc_id long, payload binary")
     # persist: both self-join aliases read the frame (see image_neardup)
-    return persist_tracked(audio_fingerprints(synthesized))
+    return persist_tracked(audio_fingerprints(_media_docs(spark, sf_dir, ramp_wav)))
 
 
 def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1970,53 +1912,37 @@ def _video_fh_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesized motion-PNG video corpus → position-aligned frame
     dHash frame (doc_id, slot, dhash) — the shared front of the
     video-modality queries and the sf-scale capped probes."""
-    import pandas as pd
-    from collections.abc import Iterator
-
+    from dataengineering_spark.caching import persist_tracked
     from dataengineering_spark.functions.multimodal import (
         make_diag_png,
         make_test_video,
         video_frame_hashes,
     )
 
-    # fan the Python synth lane across cores: the sf docs table is a
-    # single small parquet file (one scan task), and mapInPandas work
-    # is per-row expensive — scale-adaptive no-op when splits >= cores
-    docs = spread_for_compute(_docs(spark, sf_dir).select("doc_id"))
+    def diag_video(doc_id: int) -> bytes:
+        grp = doc_id // 3
+        frames = []
+        for f in range(6):
+            w = 48 + grp % 23 + (
+                1 if (doc_id % 3 == 2 and f % 2 == 0) else 0
+            )
+            frames.append(
+                make_diag_png(
+                    w,
+                    10 + grp % 5,
+                    (grp * 97 + f * 31) % 251,
+                    1 + (grp * 7 + f * 3) % 113,
+                    (grp * 13 + f * 5) % 251,
+                )
+            )
+        return make_test_video(frames)
 
-    def _synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                grp = doc_id // 3
-                frames = []
-                for f in range(6):
-                    w = 48 + grp % 23 + (
-                        1 if (doc_id % 3 == 2 and f % 2 == 0) else 0
-                    )
-                    frames.append(
-                        make_diag_png(
-                            w,
-                            10 + grp % 5,
-                            (grp * 97 + f * 31) % 251,
-                            1 + (grp * 7 + f * 3) % 113,
-                            (grp * 13 + f * 5) % 251,
-                        )
-                    )
-                rows.append((doc_id, make_test_video(frames)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    from dataengineering_spark.caching import persist_tracked
-
-    # the id frame was already spread above (6 PNG builds + 4 decodes
-    # per doc — the synth + decode lane is the query's real work)
-    synthesized = docs.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
-    )
+    # _media_docs spreads the id frame (6 PNG builds + 4 decodes per
+    # doc — the synth + decode lane is the query's real work)
+    videos = _media_docs(spark, sf_dir, diag_video)
     # persist: the per-slot pigeonhole self-join reads the frame-hash
     # frame on both aliases (see image_neardup)
-    return persist_tracked(video_frame_hashes(synthesized, n_samples=4))
+    return persist_tracked(video_frame_hashes(videos, n_samples=4))
 
 
 def q_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2075,36 +2001,19 @@ HAVING count(*) >= 3
 
 
 def q_jpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from collections.abc import Iterator
-
     from dataengineering_spark.functions.multimodal import (
         image_dimensions,
         make_solid_png,
         make_test_jpeg,
     )
 
-    # fan the Python synth lane across cores: the sf docs table is a
-    # single small parquet file (one scan task), and mapInPandas work
-    # is per-row expensive — scale-adaptive no-op when splits >= cores
-    docs = spread_for_compute(_docs(spark, sf_dir).select("doc_id"))
+    def jpeg_or_png(doc_id: int) -> bytes:
+        w, h = 16 + doc_id % 9, 16 + doc_id % 7
+        if doc_id % 2 == 0:
+            return make_test_jpeg(w, h)
+        return make_solid_png(w, h, (1, 2, 3))
 
-    def _synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w, h = 16 + doc_id % 9, 16 + doc_id % 7
-                payload = (
-                    make_test_jpeg(w, h)
-                    if doc_id % 2 == 0
-                    else make_solid_png(w, h, (1, 2, 3))
-                )
-                rows.append((doc_id, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    synthesized = docs.mapInPandas(_synth, schema="doc_id long, payload binary")
-    return image_dimensions(synthesized)
+    return image_dimensions(_media_docs(spark, sf_dir, jpeg_or_png))
 
 
 SQL_JPEG_META = """
@@ -2419,30 +2328,15 @@ FRAME_K = 4
 
 
 def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from collections.abc import Iterator
-
     from dataengineering_spark.functions.multimodal import (
         make_test_mp4,
         sample_frames,
     )
 
-    # fan the Python synth lane across cores: the sf docs table is a
-    # single small parquet file (one scan task), and mapInPandas work
-    # is per-row expensive — scale-adaptive no-op when splits >= cores
-    docs = spread_for_compute(_docs(spark, sf_dir).select("doc_id"))
+    def mp4(doc_id: int) -> bytes:
+        return make_test_mp4(30000 + (doc_id % 97) * 250)
 
-    def _synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                dur = 30000 + (doc_id % 97) * 250
-                rows.append((doc_id, make_test_mp4(dur)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    synthesized = docs.mapInPandas(_synth, schema="doc_id long, payload binary")
-    return sample_frames(synthesized, n_frames=FRAME_K)
+    return sample_frames(_media_docs(spark, sf_dir, mp4), n_frames=FRAME_K)
 
 
 SQL_FRAME_SAMPLE = f"""
@@ -3113,28 +3007,13 @@ PCM_OFF = 3959
 
 
 def q_pcm_stats(spark, sf_dir):
-    import pandas as pd
-    from collections.abc import Iterator
-
     from dataengineering_spark.functions.multimodal import make_test_wav, pcm_features
 
-    # fan the Python synth lane across cores: the sf docs table is a
-    # single small parquet file (one scan task), and mapInPandas work
-    # is per-row expensive — scale-adaptive no-op when splits >= cores
-    docs = spread_for_compute(_docs(spark, sf_dir).select("doc_id"))
+    def pcm_wav(doc_id: int) -> bytes:
+        n = 16 + (doc_id % 8)
+        return make_test_wav([((i * PCM_MULT) % PCM_MOD) - PCM_OFF for i in range(n)])
 
-    def _synth(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                n = 16 + (doc_id % 8)
-                samples = [((i * PCM_MULT) % PCM_MOD) - PCM_OFF for i in range(n)]
-                rows.append((doc_id, make_test_wav(samples)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    synthesized = docs.mapInPandas(_synth, schema="doc_id long, payload binary")
-    return pcm_features(synthesized)
+    return pcm_features(_media_docs(spark, sf_dir, pcm_wav))
 
 
 SQL_PCM_STATS = f"""

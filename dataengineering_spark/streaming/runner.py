@@ -43,7 +43,6 @@ class SyncConfig:
 
     stream: str
     offset_col: str = "block"
-    time_col: str | None = "block_date_time"
     batch_size: int = 100_000
     streaming_lag: int = 0
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
-from dataclasses import asdict, dataclass
+from dataclasses import asdict, dataclass, fields
 from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
@@ -121,22 +121,20 @@ class TableSyncStateStore:
                 out.append(int(tail))
         return sorted(out)
 
-    def get(self, stream: str) -> SyncState:
+    def _read(self, stream: str, version: int) -> SyncState:
+        """The SyncState of one committed version (the parquet row also
+        carries ``stream`` and ``version``, which are dropped)."""
         import pyarrow.parquet as pq
 
+        path = os.path.join(self.root, f"{stream}-{version:010d}.parquet")
+        row = pq.read_table(path).to_pylist()[0]
+        return SyncState(**{f.name: row[f.name] for f in fields(SyncState)})
+
+    def get(self, stream: str) -> SyncState:
         versions = self._versions(stream)
         if not versions:
             return SyncState.initial()
-        path = os.path.join(self.root, f"{stream}-{versions[-1]:010d}.parquet")
-        row = pq.read_table(path).to_pylist()[0]
-        return SyncState(
-            **{k: row[k] for k in (
-                "last_synced_block",
-                "last_synced_block_date",
-                "latest_block",
-                "latest_block_date",
-            )}
-        )
+        return self._read(stream, versions[-1])
 
     def commit(self, stream: str, state: SyncState, max_retries: int = 20) -> int:
         import pyarrow as pa
@@ -188,23 +186,7 @@ class TableSyncStateStore:
         )
 
     def history(self, stream: str) -> list[SyncState]:
-        import pyarrow.parquet as pq
-
-        out = []
-        for v in self._versions(stream):
-            path = os.path.join(self.root, f"{stream}-{v:010d}.parquet")
-            row = pq.read_table(path).to_pylist()[0]
-            out.append(
-                SyncState(
-                    **{k: row[k] for k in (
-                        "last_synced_block",
-                        "last_synced_block_date",
-                        "latest_block",
-                        "latest_block_date",
-                    )}
-                )
-            )
-        return out
+        return [self._read(stream, v) for v in self._versions(stream)]
 
 
 def commit_from_destination(

@@ -1,11 +1,25 @@
-# Common gates. The 50-query driver window is ordered on every call
-# from the committed CORRECTNESS_r*.json ledgers (reds first, then
-# never-checked, then stalest green); a query whose code changed gets
-# an entry in plans/queries.py:_EDITED_IN so only a driver green from
-# that round on counts. Nothing is generated, so there is no map to
-# regenerate at the start of a round.
+# Common gates, and the working rules a change follows.
+#
+# 1. The 50-query oracle-parity window (`make fast`) is ordered on
+#    every call from the committed CORRECTNESS_r*.json ledgers (reds
+#    first, then never-checked, then stalest green). Nothing is
+#    generated, so there is no map to regenerate at the start of a
+#    round.
+# 2. When a query's code changes, or an operator it calls changes, add
+#    the query to plans/queries.py:_EDITED_IN with the current round.
+#    It ranks red until a ledger from that round on shows it green; the
+#    pin then expires by itself (delete stale entries at leisure).
+#    Check pinned queries first with `make parity`.
+# 3. Cross-commit perf claims go only through scripts/bench_ab.py
+#    alternation (the host drifts up to 1.6x within hours), or through
+#    perfbench alternation for its two workloads.
+# 4. The default pytest run has a wall-clock budget: a new heavy
+#    fuzz/soak/equivalence test carries `pytestmark = pytest.mark.slow`.
+# 5. The "Not yet optimized" list in OPTIMIZATION_r14.md is the
+#    residual perf worklist; the LSH xxhash64 signature change needs
+#    its oracles re-derived first.
 
-.PHONY: fast test test-slow perfbench-test parity bench ship
+.PHONY: fast test test-slow perfbench-test parity streaming bench ship
 
 # the 50 queries the external driver will hard-check this round (~70 s)
 fast:
@@ -31,6 +45,11 @@ perfbench-test:
 # of ship: it takes ~25 min on 4 cores)
 parity:
 	python scripts/parity_sweep.py
+
+# the streaming suites: every sink, the partials lanes, store recovery
+# and the sync loop, slow-marked files included (not part of ship)
+streaming:
+	python -m pytest tests/test_streaming_*.py tests/test_reps_and_store_recovery.py tests/test_sync.py -q -m "slow or not slow"
 
 bench:
 	python bench.py

@@ -799,6 +799,8 @@ _EDITED_IN: dict[str, int] = {
     "semantic_reps_incremental": 14,
     # tracked-persist release, after its r14 green
     "enrichment_pipeline": 15,
+    "top_supplier": 15,
+    "important_parts": 15,
     # NULL-safe driver-gate sort for the quintile cuts
     "rfm_segments": 15,
     # synth and decode lanes moved onto udf_registry.map_rows

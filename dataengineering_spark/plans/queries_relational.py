@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataengineering_spark.caching import persist_tracked
 from dataengineering_spark.catalog import read_table
 from dataengineering_spark.functions.scalars import dsum
 from dataengineering_spark.streaming.structured import interval_join
@@ -816,8 +817,8 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     supplier = _t(spark, sf_dir, "supplier")
     revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    per_supp = (
-        li.groupBy("l_suppkey").agg(dsum(revenue, "total_revenue")).persist()
+    per_supp = persist_tracked(
+        li.groupBy("l_suppkey").agg(dsum(revenue, "total_revenue"))
     )
     top = per_supp.agg(F.max("total_revenue").alias("_max"))
     return (
@@ -945,7 +946,7 @@ IMP_FRACTION = 0.0007
 def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    per_part = li.groupBy("l_partkey").agg(dsum(revenue, "value")).persist()
+    per_part = persist_tracked(li.groupBy("l_partkey").agg(dsum(revenue, "value")))
     total = per_part.agg(
         F.expr(
             "CAST(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS STRING) AS DOUBLE)"

@@ -37,7 +37,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.similarity import (
     adc_score_candidates,
@@ -162,28 +161,6 @@ def ann_serve_batch_fn(
     return batch_fn
 
 
-def ann_serve_stream(
-    stream: DataFrame,
-    enc_path: str,
-    index: "tuple[list, dict]",
-    out_path: str,
-    checkpoint_dir: str,
-    trigger_once: bool = True,
-    **serve_kwargs,
-) -> StreamingQuery:
-    """Wire a query-vector stream into the serve loop. Returns the
-    started query; drain with ``awaitTermination`` and read accumulated
-    results (distinct on the result columns — epoch replays append
-    identical rows) from ``out_path``."""
-    batch_fn = ann_serve_batch_fn(enc_path, index, out_path, **serve_kwargs)
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def ann_ingest_batch_fn(
     enc_path: str,
     index: "tuple[list, dict]",
@@ -230,26 +207,6 @@ def ann_ingest_batch_fn(
             enc.unpersist()
 
     return batch_fn
-
-
-def ann_ingest_stream(
-    stream: DataFrame,
-    enc_path: str,
-    index: "tuple[list, dict]",
-    checkpoint_dir: str,
-    trigger_once: bool = True,
-    **ingest_kwargs,
-) -> StreamingQuery:
-    """Wire a corpus-vector stream into the ingest loop — the
-    complement of :func:`ann_serve_stream`: together they are the full
-    train-once / ingest-forever / serve-forever contract."""
-    batch_fn = ann_ingest_batch_fn(enc_path, index, **ingest_kwargs)
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ingest_cell_stats(spark: SparkSession, stats_path: str) -> DataFrame:

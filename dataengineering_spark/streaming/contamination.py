@@ -28,7 +28,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.contamination import benchmark_overlap
 
@@ -60,29 +59,6 @@ def decontaminate_batch_fn(
             hits.unpersist()
 
     return batch_fn
-
-
-def decontaminate_stream(
-    stream: DataFrame,
-    benchmark: DataFrame,
-    clean_dir: str,
-    quarantine_dir: str,
-    checkpoint_dir: str,
-    n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Wire a document stream through the contamination gate."""
-    batch_fn = decontaminate_batch_fn(
-        benchmark, clean_dir, quarantine_dir, n=n, id_col=id_col, text_col=text_col
-    )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def quarantined(spark: SparkSession, quarantine_dir: str) -> DataFrame:

@@ -4,19 +4,14 @@ dataset-card report (``plans/queries_llm.q_corpus_report``).
 A live ingest wants "what does the corpus look like NOW" without
 re-scanning everything ever ingested.  The report's measures (doc
 counts, char totals, word totals per source/lang) are all MERGEABLE,
-so the stream appends one tiny PARTIAL frame per micro-batch —
-(epoch_id, source, lang, n_docs, total_chars, total_words), an
+so the stream stores one tiny PARTIAL frame per micro-batch —
+(source, lang, n_docs, total_chars, total_words), an
 O(|source x lang|) hash aggregate of just that epoch — and the
 snapshot reader folds partials into the same GROUPING SETS rollup the
 batch query produces.  Nothing about the corpus itself is retained:
-state is O(epochs x groups), not O(docs), and a periodic compaction
-(re-aggregating partials into one epoch) keeps even that flat.
-
-Exactly-once under foreachBatch replay: a partial row is a
-DETERMINISTIC function of (epoch content, epoch id), so a replayed
-epoch appends byte-identical rows and the snapshot's ``distinct()``
-over full partial rows absorbs them — same replay contract as the
-LSH pair sink (``streaming/lsh.py``).
+state is O(epochs x groups), not O(docs), and ``compact_partials``
+keeps even that flat.  The epoch store and its replay contract are the
+shared :class:`~dataengineering_spark.streaming.store.PartialsLane`.
 
 Word counts use the batch report's exact expression
 (``size(split(text, ' '))``) so stream == batch is provable
@@ -27,10 +22,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+
+from dataengineering_spark.streaming.store import PartialsLane
 
 
-def _epoch_partial(batch: DataFrame, epoch_id: int) -> DataFrame:
+def _partial(batch: DataFrame) -> DataFrame:
     return (
         batch.select(
             "source",
@@ -44,37 +40,20 @@ def _epoch_partial(batch: DataFrame, epoch_id: int) -> DataFrame:
             F.sum("n_chars").alias("total_chars"),
             F.sum("_n_words").alias("total_words"),
         )
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
     )
 
 
-def corpus_stats_batch_fn(partials_path: str):
-    """foreachBatch hook: append the epoch's per-(source, lang)
-    partial aggregate to ``partials_path``."""
-
-    def batch_fn(batch: DataFrame, epoch_id: int) -> None:
-        if not batch.take(1):
-            return
-        _epoch_partial(batch, epoch_id).write.mode("append").parquet(
-            partials_path
-        )
-
-    return batch_fn
+def _fold(partials: DataFrame) -> DataFrame:
+    return partials.groupBy("source", "lang").agg(
+        F.sum("n_docs").alias("n_docs"),
+        F.sum("total_chars").alias("total_chars"),
+        F.sum("total_words").alias("total_words"),
+    )
 
 
-def corpus_stats_stream(
-    stream: DataFrame,
-    partials_path: str,
-    checkpoint_dir: str,
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Wire a document stream into the partials loop."""
-    writer = stream.writeStream.foreachBatch(
-        corpus_stats_batch_fn(partials_path)
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+_LANE = PartialsLane(_partial, _fold)
+corpus_stats_batch_fn = _LANE.batch_fn
+compact_partials = _LANE.compact
 
 
 def corpus_stats_snapshot(
@@ -84,10 +63,8 @@ def corpus_stats_snapshot(
     (source, lang, n_docs, total_chars, total_words, gid) over
     GROUPING SETS ((source), (lang), ()) — byte-compatible with
     ``q_corpus_report`` output on the same drained corpus."""
-    (
-        spark.read.parquet(partials_path)
-        .distinct()  # absorb foreachBatch epoch replays
-        .createOrReplaceTempView("_corpus_partials")
+    _LANE.snapshot(spark, partials_path).createOrReplaceTempView(
+        "_corpus_partials"
     )
     return spark.sql(
         """
@@ -99,26 +76,3 @@ def corpus_stats_snapshot(
         GROUP BY GROUPING SETS ((source), (lang), ())
         """
     )
-
-
-def compact_partials(spark: SparkSession, partials_path: str) -> None:
-    """Re-aggregate all partials into a single epoch-(-1) frame and
-    rewrite the sink — the O(epochs x groups) state goes back to
-    O(groups). Safe only while the stream is stopped (the rewrite is
-    not atomic against a concurrent epoch append)."""
-    folded = (
-        spark.read.parquet(partials_path)
-        .distinct()
-        .groupBy("source", "lang")
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("total_chars").alias("total_chars"),
-            F.sum("total_words").alias("total_words"),
-        )
-        .withColumn("epoch_id", F.lit(-1))
-    )
-    # materialize before overwriting the path being read
-    rows = folded.collect()
-    spark.createDataFrame(rows, folded.schema).write.mode(
-        "overwrite"
-    ).parquet(partials_path)

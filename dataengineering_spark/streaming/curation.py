@@ -27,11 +27,13 @@ corpus — asserted end-to-end in
 ``tests/test_streaming_curation_pipeline.py``, stream==batch on the
 final shard assignment rows, not just per-stage.
 
-Replay contract: every per-epoch write is an append of rows that are a
+Replay contract: every per-epoch append is of rows that are a
 deterministic function of (epoch content, frozen quantizer, static
 benchmark), so foreachBatch replays re-append byte-identical rows and
 every accumulation reader applies ``distinct()`` — the same contract
-as each face proves individually.
+as each face proves individually.  The DSIR leg is the exception: it
+is a :class:`~dataengineering_spark.streaming.store.PartialsLane`,
+where a replay writes nothing.
 
 Scale posture: unchanged from the faces — the gate broadcasts the
 static benchmark n-grams, the cell index lives in parquet (never
@@ -43,7 +45,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.contamination import benchmark_overlap
 from dataengineering_spark.operators.dedup import (
@@ -54,11 +55,16 @@ from dataengineering_spark.streaming.dsir import (
     dsir_partials_batch_fn,
     dsir_score_against_snapshot,
 )
-from dataengineering_spark.streaming.lsh import _path_exists
 from dataengineering_spark.streaming.semdedup import (
     CELL_INDEX_SCHEMA,
     _batch_cells,
     accumulated_semantic_pairs,
+)
+from dataengineering_spark.streaming.store import (
+    atomic_rewrite,
+    path_exists,
+    recover_store,
+    store_exists,
 )
 
 
@@ -151,8 +157,6 @@ def curation_pipeline_batch_fn(
         # heal any store torn by a crash mid-maintenance BEFORE this
         # epoch appends (an append would otherwise recreate the live
         # dir and recovery would later reap the rolled-aside original)
-        from dataengineering_spark.streaming.store import recover_store
-
         for d in (pairs_dir, media_pairs_dir, reps_index_dir,
                   media_reps_index_dir):
             if d is not None:
@@ -197,10 +201,10 @@ def curation_pipeline_batch_fn(
                 join_dir = (
                     reps_index_dir
                     if reps_index_dir is not None
-                    and _path_exists(spark, reps_index_dir)
+                    and path_exists(spark, reps_index_dir)
                     else index_dir
                 )
-                if _path_exists(spark, join_dir):
+                if path_exists(spark, join_dir):
                     index_cells = spark.read.schema(CELL_INDEX_SCHEMA).parquet(
                         join_dir
                     )
@@ -242,10 +246,10 @@ def curation_pipeline_batch_fn(
                     mjoin_dir = (
                         media_reps_index_dir
                         if media_reps_index_dir is not None
-                        and _path_exists(spark, media_reps_index_dir)
+                        and path_exists(spark, media_reps_index_dir)
                         else media_index_dir
                     )
-                    if _path_exists(spark, mjoin_dir):
+                    if path_exists(spark, mjoin_dir):
                         midx = spark.read.schema(
                             "doc_id long, dhash long"
                         ).parquet(mjoin_dir)
@@ -293,43 +297,6 @@ def curation_pipeline_batch_fn(
             hits.unpersist()
 
     return batch_fn
-
-
-def curation_pipeline_stream(
-    stream: DataFrame,
-    benchmark: DataFrame,
-    cent_rows: list,
-    quarantine_dir: str,
-    clean_dir: str,
-    pairs_dir: str,
-    index_dir: str,
-    dsir_partials_dir: str,
-    checkpoint_dir: str,
-    n: int = 8,
-    threshold: float = 0.35,
-    trigger_once: bool = True,
-    **col_kwargs,
-) -> StreamingQuery:
-    """Wire a pre-joined (documents ⋈ embeddings) stream through the
-    composed per-epoch pipeline."""
-    batch_fn = curation_pipeline_batch_fn(
-        benchmark,
-        cent_rows,
-        quarantine_dir,
-        clean_dir,
-        pairs_dir,
-        index_dir,
-        dsir_partials_dir,
-        n=n,
-        threshold=threshold,
-        **col_kwargs,
-    )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def pairs_to_forest_frame(
@@ -434,11 +401,6 @@ def compact_pairs_to_forest(
     at ANY point leaves either the old store or the new one, never a
     partial edge set.  Returns ``{"rows_before", "rows_after",
     "passes"}``."""
-    from dataengineering_spark.streaming.store import (
-        atomic_rewrite,
-        store_exists,
-    )
-
     if not store_exists(spark, pairs_dir):
         return {"rows_before": 0, "rows_after": 0, "passes": 0}
     edges = (
@@ -481,11 +443,6 @@ def repair_accumulated_semantic_pairs(
     torn pairs store is one call away from whole again, no payload or
     embedding re-read (the index already carries the vectors).
     Returns the rewritten pair count."""
-    from dataengineering_spark.streaming.store import (
-        atomic_rewrite,
-        store_exists,
-    )
-
     if not store_exists(spark, index_dir):
         return 0
     cells = (
@@ -542,11 +499,6 @@ def refresh_reps_index(
     refreshes, the ingest loop appends each epoch's new rows to BOTH
     indexes, so not-yet-compacted documents stay individually
     matchable.  Returns ``{"index_rows", "reps_rows"}``."""
-    from dataengineering_spark.streaming.store import (
-        atomic_rewrite,
-        store_exists,
-    )
-
     full = spark.read.schema(index_schema).parquet(index_dir).distinct()
     if store_exists(spark, pairs_dir):
         comp = connected_components(
@@ -734,8 +686,6 @@ def curation_finish(
             surv_ids.select(F.col("vec_id").alias(id_col)), id_col
         )
     )
-    from dataengineering_spark.streaming.store import store_exists
-
     if media_pairs_dir is not None and store_exists(spark, media_pairs_dir):
         # media keep-rule: min doc id per perceptual-dup cluster keeps,
         # chosen AMONG DOCS STILL PRESENT IN SURVIVORS (ADVICE r9): the

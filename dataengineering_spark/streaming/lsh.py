@@ -42,7 +42,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.dedup import (
     DEFAULT_BANDS,
@@ -51,19 +50,9 @@ from dataengineering_spark.operators.dedup import (
     lsh_bands,
     minhash_signatures,
 )
+from dataengineering_spark.streaming.store import path_exists
 
 INDEX_SCHEMA = "doc_id long, band_id int, band_sig string"
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Index-existence probe through the Hadoop FS API so it works on
-    any filesystem the session can read (local, HDFS, object stores) —
-    reading a nonexistent parquet path fails lazily at action time,
-    too late to branch on."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs.exists(hpath)
 
 
 def _band_frame(
@@ -149,7 +138,7 @@ def lsh_neardup_batch_fn(
         ).persist()
         try:
             pairs = _intra_pairs(bands_df, id_col)
-            if _path_exists(spark, index_dir):
+            if path_exists(spark, index_dir):
                 index_bands = spark.read.schema(INDEX_SCHEMA).parquet(index_dir)
                 pairs = pairs.unionByName(
                     _cross_pairs(index_bands, bands_df, id_col)
@@ -160,39 +149,6 @@ def lsh_neardup_batch_fn(
             bands_df.unpersist()
 
     return batch_fn
-
-
-def lsh_neardup_stream(
-    stream: DataFrame,
-    index_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_n: int = DEFAULT_SHINGLE,
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Wire a document stream into the incremental LSH loop (see module
-    docstring). Returns the started query; drain with
-    ``awaitTermination`` and read accumulated pairs from
-    ``pairs_dir`` (apply ``distinct()``)."""
-    batch_fn = lsh_neardup_batch_fn(
-        index_dir,
-        pairs_dir,
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-    )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def accumulated_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:

@@ -40,13 +40,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.dedup import (
     simhash_neardup_cross_pairs,
     simhash_neardup_pairs,
 )
-from dataengineering_spark.streaming.lsh import _path_exists
+from dataengineering_spark.streaming.store import atomic_rewrite, path_exists
 
 
 def media_neardup_batch_fn(
@@ -92,7 +91,7 @@ def media_neardup_batch_fn(
                 fp, max_distance=max_distance, id_col=id_col,
                 sim_col=sim_col, bits=bits,
             )
-            if _path_exists(spark, index_dir):
+            if path_exists(spark, index_dir):
                 index = spark.read.schema(
                     f"`{id_col}` long, `{sim_col}` long"
                 ).parquet(index_dir)
@@ -108,33 +107,6 @@ def media_neardup_batch_fn(
             fp.unpersist()
 
     return batch_fn
-
-
-def media_neardup_stream(
-    stream: DataFrame,
-    hasher: Callable[[DataFrame], DataFrame],
-    sim_col: str,
-    bits: int,
-    index_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    max_distance: int = 3,
-    id_col: str = "doc_id",
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Wire a media payload stream into the incremental fingerprint
-    loop (see module docstring). Drain with ``awaitTermination`` and
-    read accumulated pairs from ``pairs_dir`` (apply ``distinct()``)."""
-    batch_fn = media_neardup_batch_fn(
-        hasher, sim_col, bits, index_dir, pairs_dir,
-        max_distance=max_distance, id_col=id_col,
-    )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def accumulated_media_pairs(spark, pairs_dir: str) -> DataFrame:
@@ -174,8 +146,6 @@ def repair_accumulated_pairs(
     derived state — recomputable from the index — and the rewrite is
     atomic (streaming/store.py tmp + rename, r13): a crash at any
     point leaves the old pair set or the new one, never a partial."""
-    from dataengineering_spark.streaming.store import atomic_rewrite
-
     index = (
         spark.read.schema(f"`{id_col}` long, `{sim_col}` long")
         .parquet(index_dir)
@@ -207,8 +177,6 @@ def repair_accumulated_video_pairs(
     per-(slot, chunk, value) hot-bucket cap and atomically rewrites
     the pairs store to the capped-batch (doc_a, doc_b, n_match) set."""
     from dataengineering_spark.operators.dedup import video_neardup_pairs
-    from dataengineering_spark.streaming.store import atomic_rewrite
-
     index = (
         spark.read.schema(f"`{id_col}` long, slot int, dhash long")
         .parquet(index_dir)
@@ -265,7 +233,7 @@ def video_neardup_batch_fn(
                 fh, max_distance=max_distance, min_matching=min_matching,
                 id_col=id_col,
             )
-            if _path_exists(spark, index_dir):
+            if path_exists(spark, index_dir):
                 index = spark.read.schema(
                     f"`{id_col}` long, slot int, dhash long"
                 ).parquet(index_dir)
@@ -281,33 +249,6 @@ def video_neardup_batch_fn(
             fh.unpersist()
 
     return batch_fn
-
-
-def video_neardup_stream(
-    stream: DataFrame,
-    index_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    n_samples: int = 4,
-    max_distance: int = 3,
-    min_matching: int = 3,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Wire a video payload stream into the incremental frame-hash
-    loop; read accumulated pairs with ``accumulated_video_pairs``."""
-    batch_fn = video_neardup_batch_fn(
-        index_dir, pairs_dir, n_samples=n_samples,
-        max_distance=max_distance, min_matching=min_matching,
-        id_col=id_col, payload_col=payload_col,
-    )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def accumulated_video_pairs(spark, pairs_dir: str) -> DataFrame:

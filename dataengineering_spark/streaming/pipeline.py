@@ -34,6 +34,7 @@ from dataengineering_spark.streaming.state import (
     SyncStateStore,
     commit_from_destination,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 
 def streaming_sync_pipeline(
@@ -84,11 +85,4 @@ def streaming_sync_pipeline(
             out.unpersist()
         commit_from_destination(store, stream_name, destination_max)
 
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="0 seconds")
-    return writer.start()
+    return run_foreach_batch(stream, batch_fn, checkpoint_dir, trigger_once)

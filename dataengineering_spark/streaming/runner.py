@@ -69,8 +69,9 @@ class IncrementalSyncRunner:
     # -- T2: offset negotiation -----------------------------------------
 
     def _probe_head(self, source: DataFrame) -> int:
-        """Max offset in the source, -1 when it is empty: one bounded
-        scalar collect (parquet row-group stats, not a scan)."""
+        """Max offset in the source, -1 when it is empty: one scalar
+        collect. Under the V1 parquet reader this is a Spark job that
+        scans the offset column; it does not read footer statistics."""
         head = source.agg(F.max(self.config.offset_col)).collect()[0][0]
         return -1 if head is None else head
 

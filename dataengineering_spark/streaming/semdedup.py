@@ -45,10 +45,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.dedup import semantic_candidate_pairs
-from dataengineering_spark.streaming.lsh import _path_exists
+from dataengineering_spark.streaming.store import path_exists, recover_store
 
 CELL_INDEX_SCHEMA = "vec_id long, cid int, v array<double>, dd double"
 
@@ -104,7 +103,7 @@ def semantic_neardup_batch_fn(
         cells = _batch_cells(batch, cent_rows, id_col, vec_col).persist()
         try:
             pairs = semantic_candidate_pairs(cells, threshold=threshold)
-            if _path_exists(spark, index_dir):
+            if path_exists(spark, index_dir):
                 index_cells = spark.read.schema(CELL_INDEX_SCHEMA).parquet(
                     index_dir
                 )
@@ -123,40 +122,6 @@ def semantic_neardup_batch_fn(
     return batch_fn
 
 
-def semantic_neardup_stream(
-    stream: DataFrame,
-    cent_rows: list,
-    index_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Wire an embedding stream into the incremental semantic-dedup
-    loop (see module docstring). ``cent_rows`` is the frozen quantizer
-    — ``operators/similarity.ivf_train_rows`` output, or the
-    ``(super_rows, sub_by_super, c2)`` two-level triple for C in the
-    thousands — trained offline.
-    Drain with ``awaitTermination`` and read accumulated pairs from
-    ``pairs_dir`` (apply ``distinct()``)."""
-    batch_fn = semantic_neardup_batch_fn(
-        cent_rows,
-        index_dir,
-        pairs_dir,
-        threshold=threshold,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def accumulated_semantic_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
     """Distinct accumulated (vec_a, vec_b) candidates from a drained
     (or live) stream's pair sink — the frame to compare against the
@@ -164,8 +129,6 @@ def accumulated_semantic_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame
     torn-store recovery first (streaming/store.py): a crash during a
     maintenance rewrite can never surface here as a partial edge set
     (ADVICE r12)."""
-    from dataengineering_spark.streaming.store import recover_store
-
     recover_store(spark, pairs_dir)
     return (
         spark.read.schema("vec_a long, vec_b long")

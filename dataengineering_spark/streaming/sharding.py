@@ -41,7 +41,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from dataengineering_spark.operators.chunking import token_budget_shards
 
@@ -113,28 +112,6 @@ def token_shards_batch_fn(
         _commit(state_root, int(epoch_id), int(base), int(total))
 
     return batch_fn
-
-
-def token_shards_stream(
-    stream: DataFrame,
-    state_root: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    size_col: str,
-    order_col: str,
-    budget: int,
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Wire a document stream into the continuing shard assigner."""
-    batch_fn = token_shards_batch_fn(
-        state_root, out_dir, size_col, order_col, budget
-    )
-    writer = stream.writeStream.foreachBatch(batch_fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def accumulated_shards(spark: SparkSession, out_dir: str) -> DataFrame:

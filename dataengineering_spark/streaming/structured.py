@@ -170,7 +170,8 @@ def run_foreach_batch(
     epoch gets the full DataFrame API (multi-sink, joins, upserts),
     with the checkpoint providing exactly-once epoch tracking.
     ``trigger_once`` processes the backlog then stops (the
-    scheduler-driven operation mode of the reference)."""
+    scheduler-driven operation mode of the reference). Every sink in
+    this package starts through here with its ``*_batch_fn``."""
     writer = stream.writeStream.foreachBatch(batch_fn).option(
         "checkpointLocation", checkpoint_dir
     )

@@ -75,6 +75,42 @@ def test_enrichment_pipeline_persist_is_released_by_scope(spark, tmp_path):
     assert jsc.getPersistentRDDs().size() == before
 
 
+def _assert_persist_released_by_scope(spark, tmp_path, query, tables):
+    """``query`` persists a per-key aggregate; a tracking_scope around
+    build + write must release it. Private copies of ``tables`` keep
+    the cached plan unique to the calling test."""
+    import shutil
+
+    from dataengineering_spark.caching import tracking_scope
+    from tests.conftest import SF_SMOKE
+
+    for t in tables:
+        shutil.copy(os.path.join(SF_SMOKE, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with tracking_scope():
+        df = query(spark, str(tmp_path))
+        df.write.format("noop").mode("overwrite").save()
+        assert jsc.getPersistentRDDs().size() > before
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_top_supplier_persist_is_released_by_scope(spark, tmp_path):
+    from dataengineering_spark.plans.queries_relational import q_top_supplier
+
+    _assert_persist_released_by_scope(
+        spark, tmp_path, q_top_supplier, ("lineitem", "supplier")
+    )
+
+
+def test_important_parts_persist_is_released_by_scope(spark, tmp_path):
+    from dataengineering_spark.plans.queries_relational import q_important_parts
+
+    _assert_persist_released_by_scope(
+        spark, tmp_path, q_important_parts, ("lineitem",)
+    )
+
+
 def test_trailing_bucket_id_floors_negative_seconds(spark):
     """Round-8 ADVICE: (sec/bucket).cast(long) truncates toward zero —
     rows at negative epochs landed in the wrong bucket. The bucket id

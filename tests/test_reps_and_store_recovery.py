@@ -85,6 +85,27 @@ def test_atomic_rewrite_replaces_and_leaves_no_residue(spark, tmp_path):
     assert _read(spark, p2) == {(9, 10)}
 
 
+def test_atomic_rewrite_with_partition_columns(spark, tmp_path):
+    """A partitioned rewrite replaces every old partition (not only the
+    ones the new frame holds) and lays the new rows out by the given
+    columns."""
+    p = str(tmp_path / "store")
+    spark.createDataFrame(
+        [(1, 2, 0), (3, 4, 1), (5, 6, 2)], "vec_a long, vec_b long, epoch_id long"
+    ).write.partitionBy("epoch_id").parquet(p)
+    new = spark.createDataFrame(
+        [(9, 10, 2), (11, 12, 2)], "vec_a long, vec_b long, epoch_id long"
+    )
+    atomic_rewrite(spark, new, p, partition_by=["epoch_id"])
+    assert sorted(d for d in os.listdir(p) if not d.startswith(("_", "."))) == [
+        "epoch_id=2"
+    ]
+    got = {tuple(r) for r in spark.read.parquet(p).collect()}
+    assert got == {(9, 10, 2), (11, 12, 2)}
+    assert not os.path.exists(p + TMP_SUFFIX)
+    assert not os.path.exists(p + OLD_SUFFIX)
+
+
 def test_recover_rolls_forward_complete_tmp(spark, tmp_path):
     """Crash between rename-aside and rename-into-place, with the new
     store fully committed (_SUCCESS present): roll forward."""

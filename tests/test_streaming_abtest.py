@@ -13,9 +13,9 @@ from dataengineering_spark.plans.queries_eval import q_abtest_ztest
 from dataengineering_spark.streaming.abtest import (
     abtest_batch_fn,
     abtest_snapshot,
-    abtest_stream,
     compact_partials,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 SF = "/root/testdata/sf0.001"
 EPOCH_MOD = 3  # event_id % 3 splits the events into three arrival epochs
@@ -44,10 +44,10 @@ def _drain(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = abtest_stream(
+    q = run_foreach_batch(
         stream,
-        partials_path=str(tmp_path / "partials"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        abtest_batch_fn(str(tmp_path / "partials")),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     return ev
@@ -72,6 +72,10 @@ def test_epoch_replay_and_compaction_are_absorbed(spark, tmp_path):
 
     # compaction folds epochs but must not change the snapshot
     compact_partials(spark, partials)
+    assert _row(abtest_snapshot(spark, partials)) == before
+
+    # a replay of an epoch the compaction absorbed is still a replay
+    fn(ev.filter(F.col("event_id") % EPOCH_MOD == 0), 0)
     assert _row(abtest_snapshot(spark, partials)) == before
     n_epochs = (
         spark.read.parquet(partials).select("epoch_id").distinct().count()

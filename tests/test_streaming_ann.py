@@ -20,9 +20,9 @@ from dataengineering_spark.streaming.ann import (
     accumulated_results,
     ann_serve_batch,
     ann_serve_batch_fn,
-    ann_serve_stream,
     save_encoded_corpus,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 SF = "/root/testdata/sf0.001"
 DIM, C, NPROBE, M, KSUB, K = 64, 8, 2, 4, 8, 5
@@ -67,13 +67,15 @@ def test_stream_results_equal_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = ann_serve_stream(
+    q = run_foreach_batch(
         stream,
-        enc_path,
-        index,
-        out_path=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        k=K, nprobe=NPROBE, m_sub=M, dim=DIM,
+        ann_serve_batch_fn(
+            enc_path,
+            index,
+            out_path=str(tmp_path / "out"),
+            k=K, nprobe=NPROBE, m_sub=M, dim=DIM,
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 
@@ -106,9 +108,15 @@ def test_serve_scan_is_partition_pruned(spark, tmp_path):
             batch, enc_path, index, k=K, nprobe=NPROBE, m_sub=M, dim=DIM
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
+    # the encoded-corpus scan is the one whose output carries the cid
+    # partition column (its path may be abbreviated in the plan string)
     scan = next(
         ln for ln in plan.splitlines()
-        if "FileScan" in ln and "/enc" in ln
+        if "FileScan" in ln
+        and any(
+            a.startswith("cid#")
+            for a in ln.split("[", 1)[1].split("]", 1)[0].split(",")
+        )
     )
     assert "PartitionFilters" in scan and "cid" in scan.split(
         "PartitionFilters"

@@ -16,11 +16,12 @@ from dataengineering_spark.operators.similarity import (
     train_ivfpq,
 )
 from dataengineering_spark.streaming.ann import (
-    ann_ingest_stream,
+    ann_ingest_batch_fn,
     ann_serve_batch,
     ingest_cell_stats,
     save_encoded_corpus,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 SF = "/root/testdata/sf0.001"
 DIM, C, NPROBE, M, KSUB, K = 64, 8, 2, 4, 8, 5
@@ -55,13 +56,15 @@ def _drain_ingest(spark, tmp_path, full, index, enc_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = ann_ingest_stream(
+    q = run_foreach_batch(
         stream,
-        enc_path,
-        index,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        m_sub=M, dim=DIM,
-        stats_path=str(tmp_path / "stats"),
+        ann_ingest_batch_fn(
+            enc_path,
+            index,
+            m_sub=M, dim=DIM,
+            stats_path=str(tmp_path / "stats"),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 

@@ -14,9 +14,9 @@ from dataengineering_spark.functions.text import word_array
 from dataengineering_spark.operators.contamination import benchmark_overlap
 from dataengineering_spark.streaming.contamination import (
     decontaminate_batch_fn,
-    decontaminate_stream,
     quarantined,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 SF = "/root/testdata/sf0.001"
 EPOCH_MOD = 3
@@ -50,13 +50,15 @@ def _drain(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = decontaminate_stream(
+    q = run_foreach_batch(
         stream,
-        _benchmark(docs),
-        clean_dir=str(tmp_path / "clean"),
-        quarantine_dir=str(tmp_path / "quarantine"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        n=N,
+        decontaminate_batch_fn(
+            _benchmark(docs),
+            clean_dir=str(tmp_path / "clean"),
+            quarantine_dir=str(tmp_path / "quarantine"),
+            n=N,
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     return docs

@@ -14,8 +14,8 @@ from dataengineering_spark.streaming.corpus import (
     compact_partials,
     corpus_stats_batch_fn,
     corpus_stats_snapshot,
-    corpus_stats_stream,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 SF = "/root/testdata/sf0.001"
 EPOCH_MOD = 3  # doc_id % 3 splits the corpus into three arrival epochs
@@ -46,10 +46,10 @@ def _drain(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = corpus_stats_stream(
+    q = run_foreach_batch(
         stream,
-        partials_path=str(tmp_path / "partials"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        corpus_stats_batch_fn(str(tmp_path / "partials")),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     return docs
@@ -74,6 +74,10 @@ def test_epoch_replay_and_compaction_are_absorbed(spark, tmp_path):
 
     # compaction folds epochs but must not change the snapshot
     compact_partials(spark, partials)
+    assert _rows(corpus_stats_snapshot(spark, partials)) == before
+
+    # a replay of an epoch the compaction absorbed is still a replay
+    fn(docs.filter(F.col("doc_id") % EPOCH_MOD == 0), 0)
     assert _rows(corpus_stats_snapshot(spark, partials)) == before
     n_epochs = (
         spark.read.parquet(partials).select("epoch_id").distinct().count()

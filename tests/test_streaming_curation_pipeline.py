@@ -30,8 +30,9 @@ from dataengineering_spark.plans.queries_curation import (
 from dataengineering_spark.streaming.contamination import quarantined
 from dataengineering_spark.streaming.curation import (
     curation_finish,
-    curation_pipeline_stream,
+    curation_pipeline_batch_fn,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 import pytest
 
@@ -92,24 +93,26 @@ def _drain(spark, tmp_path, cent_rows, quality_gate=False, **extra):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = curation_pipeline_stream(
+    q = run_foreach_batch(
         stream,
-        _benchmark(docs),
-        cent_rows,
-        quarantine_dir=str(tmp_path / "quarantine"),
-        clean_dir=str(tmp_path / "clean"),
-        pairs_dir=str(tmp_path / "pairs"),
-        index_dir=str(tmp_path / "index"),
-        dsir_partials_dir=str(tmp_path / "dsir"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        n=N_GRAM,
-        threshold=THRESHOLD,
-        **(
-            {"quality_rejects_dir": str(tmp_path / "rejects")}
-            if quality_gate
-            else {}
+        curation_pipeline_batch_fn(
+            _benchmark(docs),
+            cent_rows,
+            quarantine_dir=str(tmp_path / "quarantine"),
+            clean_dir=str(tmp_path / "clean"),
+            pairs_dir=str(tmp_path / "pairs"),
+            index_dir=str(tmp_path / "index"),
+            dsir_partials_dir=str(tmp_path / "dsir"),
+            n=N_GRAM,
+            threshold=THRESHOLD,
+            **(
+                {"quality_rejects_dir": str(tmp_path / "rejects")}
+                if quality_gate
+                else {}
+            ),
+            **extra,
         ),
-        **extra,
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
     return docs
@@ -352,21 +355,23 @@ def test_multimodal_stream_with_media_leg_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = curation_pipeline_stream(
+    q = run_foreach_batch(
         stream,
-        _benchmark(docs),
-        cent_rows,
-        quarantine_dir=str(tmp_path / "quarantine"),
-        clean_dir=str(tmp_path / "clean"),
-        pairs_dir=str(tmp_path / "pairs"),
-        index_dir=str(tmp_path / "index"),
-        dsir_partials_dir=str(tmp_path / "dsir"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        n=N_GRAM,
-        threshold=THRESHOLD,
-        media_payload_col="payload",
-        media_index_dir=str(tmp_path / "midx"),
-        media_pairs_dir=str(tmp_path / "mpairs"),
+        curation_pipeline_batch_fn(
+            _benchmark(docs),
+            cent_rows,
+            quarantine_dir=str(tmp_path / "quarantine"),
+            clean_dir=str(tmp_path / "clean"),
+            pairs_dir=str(tmp_path / "pairs"),
+            index_dir=str(tmp_path / "index"),
+            dsir_partials_dir=str(tmp_path / "dsir"),
+            n=N_GRAM,
+            threshold=THRESHOLD,
+            media_payload_col="payload",
+            media_index_dir=str(tmp_path / "midx"),
+            media_pairs_dir=str(tmp_path / "mpairs"),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 
@@ -505,21 +510,23 @@ def test_media_cap_policy_authorized_repair_equals_capped_batch(
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = curation_pipeline_stream(
+    q = run_foreach_batch(
         stream,
-        _benchmark(docs),
-        cent_rows,
-        quarantine_dir=str(tmp_path / "quarantine"),
-        clean_dir=str(tmp_path / "clean"),
-        pairs_dir=str(tmp_path / "pairs"),
-        index_dir=str(tmp_path / "index"),
-        dsir_partials_dir=str(tmp_path / "dsir"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        n=N_GRAM,
-        threshold=THRESHOLD,
-        media_payload_col="payload",
-        media_index_dir=str(tmp_path / "midx"),
-        media_pairs_dir=str(tmp_path / "mpairs"),
+        curation_pipeline_batch_fn(
+            _benchmark(docs),
+            cent_rows,
+            quarantine_dir=str(tmp_path / "quarantine"),
+            clean_dir=str(tmp_path / "clean"),
+            pairs_dir=str(tmp_path / "pairs"),
+            index_dir=str(tmp_path / "index"),
+            dsir_partials_dir=str(tmp_path / "dsir"),
+            n=N_GRAM,
+            threshold=THRESHOLD,
+            media_payload_col="payload",
+            media_index_dir=str(tmp_path / "midx"),
+            media_pairs_dir=str(tmp_path / "mpairs"),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 

@@ -17,8 +17,8 @@ from dataengineering_spark.streaming.distinct import (
     _epoch_partial,
     distinct_batch_fn,
     distinct_snapshot,
-    distinct_stream,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 SF = "/root/testdata/sf0.001"
 EPOCH_MOD = 3
@@ -47,10 +47,10 @@ def _drain(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = distinct_stream(
+    q = run_foreach_batch(
         stream,
-        partials_path=str(tmp_path / "partials"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        distinct_batch_fn(str(tmp_path / "partials")),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     return ev

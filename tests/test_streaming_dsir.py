@@ -15,9 +15,9 @@ from dataengineering_spark.plans.queries_curation import q_dsir_weights
 from dataengineering_spark.streaming.dsir import (
     compact_dsir_partials,
     dsir_partials_batch_fn,
-    dsir_partials_stream,
     dsir_score_against_snapshot,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 SF = "/root/testdata/sf0.001"
 EPOCH_MOD = 3  # doc_id % 3 splits the corpus into three arrival epochs
@@ -45,10 +45,10 @@ def _drain(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = dsir_partials_stream(
+    q = run_foreach_batch(
         stream,
-        partials_path=str(tmp_path / "partials"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        dsir_partials_batch_fn(str(tmp_path / "partials")),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     return docs
@@ -78,6 +78,11 @@ def test_epoch_replay_and_compaction_are_absorbed(spark, tmp_path):
 
     # compaction folds epochs but must not change the scores
     compact_dsir_partials(spark, partials)
+    assert _rows(dsir_score_against_snapshot(spark, docs, partials)) == before
+    release_tracked()
+
+    # a replay of an epoch the compaction absorbed is still a replay
+    fn(docs.filter(F.col("doc_id") % EPOCH_MOD == 0), 0)
     assert _rows(dsir_score_against_snapshot(spark, docs, partials)) == before
     release_tracked()
     n_epochs = spark.read.parquet(partials).select("epoch_id").distinct().count()

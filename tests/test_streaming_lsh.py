@@ -19,8 +19,8 @@ pytestmark = pytest.mark.slow
 from dataengineering_spark.streaming.lsh import (
     accumulated_pairs,
     lsh_neardup_batch_fn,
-    lsh_neardup_stream,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 # Three near-dup clusters + two singletons, split so that cluster A
 # spans epochs (cross-batch pair), cluster B is intra-epoch, and
@@ -67,11 +67,13 @@ def _drain(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = lsh_neardup_stream(
+    q = run_foreach_batch(
         stream,
-        index_dir=str(tmp_path / "index"),
-        pairs_dir=str(tmp_path / "pairs"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        lsh_neardup_batch_fn(
+            index_dir=str(tmp_path / "index"),
+            pairs_dir=str(tmp_path / "pairs"),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
     return src
@@ -108,11 +110,13 @@ def test_epoch_replay_is_idempotent_after_distinct(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = lsh_neardup_stream(
+    q = run_foreach_batch(
         stream,
-        index_dir=str(tmp_path / "index"),
-        pairs_dir=str(tmp_path / "pairs"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        lsh_neardup_batch_fn(
+            index_dir=str(tmp_path / "index"),
+            pairs_dir=str(tmp_path / "pairs"),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
     before = {

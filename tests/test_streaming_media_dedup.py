@@ -19,8 +19,9 @@ from dataengineering_spark.functions.multimodal import (
 from dataengineering_spark.operators.dedup import simhash_neardup_pairs
 from dataengineering_spark.streaming.media_dedup import (
     accumulated_media_pairs,
-    media_neardup_stream,
+    media_neardup_batch_fn,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 import pytest
 
@@ -67,14 +68,16 @@ def _drain(spark, tmp_path, corpus, hasher, sim_col, bits):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = media_neardup_stream(
+    q = run_foreach_batch(
         stream,
-        hasher,
-        sim_col,
-        bits,
-        index_dir=str(tmp_path / "index"),
-        pairs_dir=str(tmp_path / "pairs"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        media_neardup_batch_fn(
+            hasher,
+            sim_col,
+            bits,
+            index_dir=str(tmp_path / "index"),
+            pairs_dir=str(tmp_path / "pairs"),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 
@@ -143,7 +146,7 @@ def test_video_stream_pairs_equal_batch(spark, tmp_path):
     from dataengineering_spark.operators.dedup import video_neardup_pairs
     from dataengineering_spark.streaming.media_dedup import (
         accumulated_video_pairs,
-        video_neardup_stream,
+        video_neardup_batch_fn,
     )
 
     corpus = _video_corpus(spark)
@@ -161,11 +164,13 @@ def test_video_stream_pairs_equal_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = video_neardup_stream(
+    q = run_foreach_batch(
         stream,
-        index_dir=str(tmp_path / "index"),
-        pairs_dir=str(tmp_path / "pairs"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        video_neardup_batch_fn(
+            index_dir=str(tmp_path / "index"),
+            pairs_dir=str(tmp_path / "pairs"),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
     got = {
@@ -227,7 +232,7 @@ def test_video_stream_then_repair_equals_capped_batch(spark, tmp_path):
     from dataengineering_spark.streaming.media_dedup import (
         accumulated_video_pairs,
         repair_accumulated_video_pairs,
-        video_neardup_stream,
+        video_neardup_batch_fn,
     )
 
     corpus = _video_corpus(spark)
@@ -245,11 +250,13 @@ def test_video_stream_then_repair_equals_capped_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = video_neardup_stream(
+    q = run_foreach_batch(
         stream,
-        index_dir=str(tmp_path / "index"),
-        pairs_dir=str(tmp_path / "pairs"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        video_neardup_batch_fn(
+            index_dir=str(tmp_path / "index"),
+            pairs_dir=str(tmp_path / "pairs"),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
     cap = 2

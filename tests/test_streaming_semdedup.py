@@ -20,8 +20,8 @@ from dataengineering_spark.operators.similarity import (
 from dataengineering_spark.streaming.semdedup import (
     accumulated_semantic_pairs,
     semantic_neardup_batch_fn,
-    semantic_neardup_stream,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 SF = "/root/testdata/sf0.001"
 EPOCH_MOD = 3
@@ -65,13 +65,15 @@ def _drain(spark, tmp_path, cent_rows, emb):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = semantic_neardup_stream(
+    q = run_foreach_batch(
         stream,
-        cent_rows,
-        index_dir=str(tmp_path / "index"),
-        pairs_dir=str(tmp_path / "pairs"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        threshold=THRESHOLD,
+        semantic_neardup_batch_fn(
+            cent_rows,
+            index_dir=str(tmp_path / "index"),
+            pairs_dir=str(tmp_path / "pairs"),
+            threshold=THRESHOLD,
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
 
@@ -118,13 +120,15 @@ def test_two_level_stream_pairs_equal_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = semantic_neardup_stream(
+    q = run_foreach_batch(
         stream,
-        frozen,
-        index_dir=str(tmp_path / "index"),
-        pairs_dir=str(tmp_path / "pairs"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        threshold=THRESHOLD,
+        semantic_neardup_batch_fn(
+            frozen,
+            index_dir=str(tmp_path / "index"),
+            pairs_dir=str(tmp_path / "pairs"),
+            threshold=THRESHOLD,
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     got = {

@@ -15,8 +15,8 @@ from dataengineering_spark.operators.chunking import token_budget_shards
 from dataengineering_spark.streaming.sharding import (
     accumulated_shards,
     token_shards_batch_fn,
-    token_shards_stream,
 )
+from dataengineering_spark.streaming.structured import run_foreach_batch
 
 SF = "/root/testdata/sf0.001"
 BUDGET = 7_000
@@ -53,14 +53,16 @@ def _drain(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = token_shards_stream(
+    q = run_foreach_batch(
         stream,
-        state_root=str(tmp_path / "state"),
-        out_dir=str(tmp_path / "shards"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        size_col="n_chars",
-        order_col="doc_id",
-        budget=BUDGET,
+        token_shards_batch_fn(
+            state_root=str(tmp_path / "state"),
+            out_dir=str(tmp_path / "shards"),
+            size_col="n_chars",
+            order_col="doc_id",
+            budget=BUDGET,
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     return docs

@@ -46,10 +46,11 @@ perfbench-test:
 parity:
 	python scripts/parity_sweep.py
 
-# the streaming suites: every sink, the partials lanes, store recovery
-# and the sync loop, slow-marked files included (not part of ship)
+# the streaming suites: every sink, the partials and index lanes, store
+# recovery and compaction, and the sync loop, slow-marked files
+# included (not part of ship)
 streaming:
-	python -m pytest tests/test_streaming_*.py tests/test_reps_and_store_recovery.py tests/test_sync.py -q -m "slow or not slow"
+	python -m pytest tests/test_streaming_*.py tests/test_reps_and_store_recovery.py tests/test_pair_store_maintenance.py tests/test_sync.py -q -m "slow or not slow"
 
 bench:
 	python bench.py

@@ -7,7 +7,9 @@ Shape: the expensive artifacts are built exactly once, offline —
    ``train_ivfpq`` and persisted by ``save_ivfpq_index``;
 2. the ENCODED CORPUS — (vec_id, codes, cid) from
    ``operators.similarity.encode_corpus`` — written cid-PARTITIONED by
-   :func:`save_encoded_corpus`.
+   :func:`save_encoded_corpus` as epoch -1 of an epoch store
+   (``epoch_id=E/cid=C``, streaming/store.py), the layout the ingest
+   stream adds its epochs to.
 
 Each micro-batch of query vectors then costs only:
 
@@ -25,9 +27,7 @@ Each micro-batch of query vectors then costs only:
 What this deliberately does NOT do: re-encode the corpus per batch
 (``ivfpq_topk`` called naively in foreachBatch would — the reason
 ``encode_corpus`` exists), or hold any executor state-store state
-(the index is a parquet table; the stream is stateless, so replays
-of a failed epoch rewrite the same deterministic rows keyed by
-query_id + epoch).
+(the index is a parquet table and the stream is stateless).
 
 Reference scope note: the reference has no vector machinery; this is
 part of the LLM-pipeline extension tier.
@@ -44,14 +44,22 @@ from dataengineering_spark.operators.similarity import (
     pq_query_luts,
     topk_per_query,
 )
+from dataengineering_spark.streaming.store import (
+    EPOCH_COL,
+    read_store,
+    write_epoch,
+)
 
 
 def save_encoded_corpus(enc: DataFrame, path: str) -> None:
     """Materialize an ``encode_corpus`` frame cid-partitioned — the
     layout under which a probe of n cells is a partition-pruned scan
     (``PartitionFilters: cid IN ...`` in the serve plan, asserted in
-    ``tests/test_streaming_ann.py``)."""
-    enc.write.mode("overwrite").partitionBy("cid").parquet(path)
+    ``tests/test_streaming_ann.py``).  The offline build is epoch -1,
+    below every epoch an ingest stream adds."""
+    enc.withColumn(EPOCH_COL, F.lit(-1)).write.mode("overwrite").partitionBy(
+        EPOCH_COL, "cid"
+    ).parquet(path)
 
 
 def probe_luts_for(
@@ -131,11 +139,8 @@ def ann_serve_batch_fn(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
-    """foreachBatch hook: serve the epoch's queries and append results
-    (stamped with the epoch id) to ``out_path``. Results are a
-    deterministic function of (query vector, persisted index), so an
-    epoch replay after failure re-appends identical rows — consumers
-    key on query_id as they already must."""
+    """foreachBatch hook: serve the epoch's queries and write the
+    results as the epoch's partition of ``out_path``."""
 
     def batch_fn(batch: DataFrame, epoch_id: int) -> None:
         if not batch.take(1):
@@ -154,9 +159,7 @@ def ann_serve_batch_fn(
                 id_col=id_col,
                 vec_col=vec_col,
             )
-            out.withColumn("epoch_id", F.lit(int(epoch_id))).write.mode(
-                "append"
-            ).parquet(out_path)
+            write_epoch(out, out_path, epoch_id)
 
     return batch_fn
 
@@ -172,17 +175,17 @@ def ann_ingest_batch_fn(
 ):
     """foreachBatch hook for the CORPUS side of the stream: encode the
     epoch's vectors under the FROZEN quantizers (one narrow map — the
-    same ``encode_corpus`` pass the offline build uses) and append
-    them cid-partitioned, so the next serve call's partition pruning
-    sees them with no index rebuild.
+    same ``encode_corpus`` pass the offline build uses) and write them
+    as the epoch's cid-partitioned slice of the corpus, so the next
+    serve call's partition pruning sees them with no index rebuild.
 
     Freezing the quantizers is the deliberate trade: assignments stay
-    comparable forever (a vector's codes never change under replay —
-    appends are idempotent per epoch content), at the price of index
-    staleness as the distribution drifts.  ``stats_path`` makes that
-    drift measurable instead of silent: per epoch, (epoch_id, cid,
-    n_vectors) is appended — an O(#cells) frame whose growing skew
-    (new mass crowding few cells) is the retrain signal."""
+    comparable forever (a vector's codes never change), at the price
+    of index staleness as the distribution drifts.  ``stats_path``
+    makes that drift measurable instead of silent: per epoch,
+    (epoch_id, cid, n_vectors) is written — an O(#cells) frame whose
+    growing skew (new mass crowding few cells) is the retrain
+    signal."""
 
     def batch_fn(batch: DataFrame, epoch_id: int) -> None:
         if not batch.take(1):
@@ -194,15 +197,10 @@ def ann_ingest_batch_fn(
             id_col=id_col, vec_col=vec_col,
         ).persist()
         try:
-            enc.write.mode("append").partitionBy("cid").parquet(enc_path)
+            write_epoch(enc, enc_path, epoch_id, partition_by=["cid"])
             if stats_path is not None:
-                (
-                    enc.groupBy("cid")
-                    .agg(F.count(F.lit(1)).alias("n_vectors"))
-                    .withColumn("epoch_id", F.lit(int(epoch_id)))
-                    .write.mode("append")
-                    .parquet(stats_path)
-                )
+                stats = enc.groupBy("cid").agg(F.count("*").alias("n_vectors"))
+                write_epoch(stats, stats_path, epoch_id)
         finally:
             enc.unpersist()
 
@@ -219,9 +217,7 @@ def ingest_cell_stats(spark: SparkSession, stats_path: str) -> DataFrame:
 
 def accumulated_results(spark: SparkSession, out_path: str) -> DataFrame:
     """Accumulated (query_id, neighbor_id, rank, adc_d2) from a drained
-    stream's sink, replay-deduplicated."""
-    return (
-        spark.read.parquet(out_path)
-        .select("query_id", "neighbor_id", "rank", "adc_d2")
-        .distinct()
+    stream's sink."""
+    return read_store(spark, out_path).select(
+        "query_id", "neighbor_id", "rank", "adc_d2"
     )

@@ -6,30 +6,28 @@ they reach the training sink, not in a nightly sweep after.
 Shape: the benchmark n-gram set is STATIC and tiny next to any corpus
 (the same premise the batch operator builds on), so the gate is a
 stateless per-epoch classify-and-route — the simplest rung of the
-streaming ladder, and deliberately so: no index, no watermark, no
-replay bookkeeping beyond deterministic appends. Each micro-batch:
+streaming ladder, and deliberately so: no index, no watermark, and
+both sinks are epoch stores (streaming/store.py). Each micro-batch:
 
 1. runs the batch tier's own ``benchmark_overlap`` against the
    benchmark frame (broadcast map-side, only hits shuffle);
-2. appends hit rows (doc_id, hit_ngrams, bench_items) to the
+2. writes hit rows (doc_id, hit_ngrams, bench_items) to the
    quarantine sink — the evidence a contamination audit reads;
-3. appends the non-hit documents to the clean sink — what training
+3. writes the non-hit documents to the clean sink — what training
    actually consumes.
 
 Every document lands in exactly one sink, and classification depends
 only on (document, benchmark) — never on arrival order or epoch
 boundaries — so the drained stream's sinks equal the batch
 ``benchmark_overlap`` split exactly (tests/test_streaming_contamination).
-foreachBatch replays re-append byte-identical rows; consumers dedup by
-doc_id / distinct as with every append sink in this package.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dataengineering_spark.operators.contamination import benchmark_overlap
+from dataengineering_spark.streaming.store import read_store, write_epoch
 
 
 def decontaminate_batch_fn(
@@ -51,10 +49,9 @@ def decontaminate_batch_fn(
             batch, benchmark, n=n, id_col=id_col, text_col=text_col
         ).persist()
         try:
-            hits.write.mode("append").parquet(quarantine_dir)
-            batch.join(hits.select(id_col), id_col, "left_anti").write.mode(
-                "append"
-            ).parquet(clean_dir)
+            write_epoch(hits, quarantine_dir, epoch_id)
+            clean = batch.join(hits.select(id_col), id_col, "left_anti")
+            write_epoch(clean, clean_dir, epoch_id)
         finally:
             hits.unpersist()
 
@@ -62,9 +59,7 @@ def decontaminate_batch_fn(
 
 
 def quarantined(spark: SparkSession, quarantine_dir: str) -> DataFrame:
-    """Distinct accumulated quarantine rows from a drained stream."""
-    return (
-        spark.read.schema("doc_id long, hit_ngrams long, bench_items long")
-        .parquet(quarantine_dir)
-        .distinct()
+    """Accumulated quarantine rows from a drained stream."""
+    return read_store(
+        spark, quarantine_dir, "doc_id long, hit_ngrams long, bench_items long"
     )

@@ -27,14 +27,6 @@ corpus — asserted end-to-end in
 ``tests/test_streaming_curation_pipeline.py``, stream==batch on the
 final shard assignment rows, not just per-stage.
 
-Replay contract: every per-epoch append is of rows that are a
-deterministic function of (epoch content, frozen quantizer, static
-benchmark), so foreachBatch replays re-append byte-identical rows and
-every accumulation reader applies ``distinct()`` — the same contract
-as each face proves individually.  The DSIR leg is the exception: it
-is a :class:`~dataengineering_spark.streaming.store.PartialsLane`,
-where a replay writes nothing.
-
 Scale posture: unchanged from the faces — the gate broadcasts the
 static benchmark n-grams, the cell index lives in parquet (never
 executor state), per-epoch DSIR state is O(B) rows, and the finishers
@@ -48,23 +40,24 @@ from pyspark.sql import functions as F
 
 from dataengineering_spark.operators.contamination import benchmark_overlap
 from dataengineering_spark.operators.dedup import (
+    _FOREST_TARGET_EDGES_PER_PART,
     connected_components,
-    semantic_candidate_pairs,
 )
 from dataengineering_spark.streaming.dsir import (
     dsir_partials_batch_fn,
     dsir_score_against_snapshot,
 )
+from dataengineering_spark.streaming.media_dedup import media_lane
 from dataengineering_spark.streaming.semdedup import (
     CELL_INDEX_SCHEMA,
-    _batch_cells,
     accumulated_semantic_pairs,
+    semantic_lane,
 )
 from dataengineering_spark.streaming.store import (
-    atomic_rewrite,
-    path_exists,
-    recover_store,
+    read_store,
+    rewrite_epochs,
     store_exists,
+    write_epoch,
 )
 
 
@@ -103,10 +96,8 @@ def curation_pipeline_batch_fn(
 
     ``media_payload_col`` (+ ``media_index_dir``/``media_pairs_dir``)
     enables the perceptual MEDIA dedup leg: the clean slice's image
-    payloads run the streaming dHash index loop
-    (``streaming/media_dedup`` shape — intra-batch pigeonhole
-    self-join plus cross-batch join against the persisted fingerprint
-    index). Accumulated media pairs feed ``curation_finish``'s media
+    payloads run the dHash index lane of ``streaming/media_dedup``.
+    Accumulated media pairs feed ``curation_finish``'s media
     keep-rule at drain time, so a document can be dropped for LOOKING
     like an earlier one even when its text and embedding survive.
 
@@ -114,11 +105,10 @@ def curation_pipeline_batch_fn(
     pair store(s) after every k-th epoch — the bounded-state
     maintenance window as part of the loop itself (the r12 sf10 probe
     measured 180×/97× store contraction with identical drain output).
-    Replay-safe: a replayed epoch re-appends its pairs onto the
-    compacted forest, whose union has the same connected components
-    (the epoch's connectivity is already inside the forest), so every
-    drain-time consumer is unchanged — asserted stream==batch
-    end-to-end in tests/test_streaming_curation_pipeline.py.
+    Replay-safe: the compacted forest keeps the epoch's mark, so a
+    replayed epoch writes no pairs and leaves the maintenance to the
+    next window — asserted stream==batch end-to-end, replay included,
+    in tests/test_streaming_curation_pipeline.py.
 
     ``reps_index_dir`` / ``media_reps_index_dir`` (r13, requires
     ``compact_every``) switch the cross-epoch candidate join to a
@@ -127,13 +117,13 @@ def curation_pipeline_batch_fn(
     every accumulated member, making per-epoch pair volume
     O(#components), flat across epochs on replica corpora — see
     :func:`refresh_reps_index` for the exactness/conservativeness
-    contract.  The full index keeps growing append-only (the drain
+    contract.  The full index keeps growing epoch by epoch (the drain
     still reads it); only the JOIN input is repped.
 
     Concurrency: foreachBatch serializes epochs per stream, and the
     maintenance window (compaction + reps refresh) runs at the END of
-    the epoch hook, after the epoch's own appends — store rewrites
-    never race an appender in this design; external writers must fence
+    the epoch hook, after the epoch's own writes — store rewrites
+    never race a writer in this design; external writers must fence
     themselves (see compact_pairs_to_forest)."""
     dsir_fn = dsir_partials_batch_fn(dsir_partials_dir)
     if media_payload_col is not None and not (
@@ -149,18 +139,19 @@ def curation_pipeline_batch_fn(
         )
     if media_reps_index_dir is not None and media_payload_col is None:
         raise ValueError("media_reps_index_dir requires media_payload_col")
+    sem = semantic_lane(cent_rows, threshold, id_col=id_col, vec_col=vec_col)
+    if media_payload_col is not None:
+        from dataengineering_spark.functions.multimodal import dhash_images
+
+        media = media_lane(lambda clean: dhash_images(clean.select(
+            F.col(id_col).alias("doc_id"),
+            F.col(media_payload_col).alias("payload"),
+        )), "dhash", 64)
 
     def batch_fn(batch: DataFrame, epoch_id: int) -> None:
         if not batch.take(1):
             return
         spark = batch.sparkSession
-        # heal any store torn by a crash mid-maintenance BEFORE this
-        # epoch appends (an append would otherwise recreate the live
-        # dir and recovery would later reap the rolled-aside original)
-        for d in (pairs_dir, media_pairs_dir, reps_index_dir,
-                  media_reps_index_dir):
-            if d is not None:
-                recover_store(spark, d)
         hits = benchmark_overlap(
             batch, benchmark, n=n, id_col=id_col, text_col=text_col
         ).persist()
@@ -177,110 +168,44 @@ def curation_pipeline_batch_fn(
             keepers = rules.filter(F.col("keep")).select(
                 F.col("doc_id").alias(id_col)
             )
-            rules.filter(~F.col("keep")).write.mode("append").parquet(
-                quality_rejects_dir
-            )
+            write_epoch(rules.filter(~F.col("keep")), quality_rejects_dir,
+                        epoch_id)
             clean = clean.join(keepers, id_col)
         clean = clean.persist()
         try:
-            hits.write.mode("append").parquet(quarantine_dir)
+            write_epoch(hits, quarantine_dir, epoch_id)
             # payloads stay OUT of the clean store: the media leg keeps
-            # its own 16 B/object fingerprint index, and the drain-time
-            # readers distinct() the clean table (binary would bloat
-            # both the store and that exchange)
-            clean.drop(
-                vec_col, *([media_payload_col] if media_payload_col else [])
-            ).write.mode("append").parquet(clean_dir)
-            # SemDeDup leg — clean slice only
-            cells = _batch_cells(clean, cent_rows, id_col, vec_col).persist()
-            try:
-                pairs = semantic_candidate_pairs(cells, threshold=threshold)
-                # reps mode: join the representatives index (one row
-                # per known component + everything since the last
-                # compaction) instead of the full accumulated index
-                join_dir = (
-                    reps_index_dir
-                    if reps_index_dir is not None
-                    and path_exists(spark, reps_index_dir)
-                    else index_dir
-                )
-                if path_exists(spark, join_dir):
-                    index_cells = spark.read.schema(CELL_INDEX_SCHEMA).parquet(
-                        join_dir
-                    )
-                    pairs = pairs.unionByName(
-                        semantic_candidate_pairs(
-                            cells, index_cells=index_cells, threshold=threshold
-                        )
-                    )
-                pairs.distinct().write.mode("append").parquet(pairs_dir)
-                cells_out = cells.select("vec_id", "cid", "v", "dd")
-                cells_out.write.mode("append").parquet(index_dir)
-                if reps_index_dir is not None:
-                    # new rows stay individually matchable until the
-                    # next refresh folds them into components
-                    cells_out.write.mode("append").parquet(reps_index_dir)
-            finally:
-                cells.unpersist()
+            # its own 16 B/object fingerprint index
+            kept = clean.drop(vec_col, *filter(None, [media_payload_col]))
+            write_epoch(kept, clean_dir, epoch_id)
+            # SemDeDup leg — clean slice only; in reps mode the epoch
+            # joins the representatives index (one row per known
+            # component + everything since the last compaction), and
+            # its new rows stay individually matchable there until the
+            # next refresh folds them into components
+            fresh = sem.ingest(clean, epoch_id, index_dir, pairs_dir,
+                               reps_index_dir)
             # media dedup leg — clean slice's payloads through the
             # incremental fingerprint index (streaming/media_dedup)
-            if media_payload_col is not None:
-                from dataengineering_spark.functions.multimodal import (
-                    dhash_images,
-                )
-                from dataengineering_spark.operators.dedup import (
-                    simhash_neardup_cross_pairs,
-                    simhash_neardup_pairs,
-                )
-
-                fp = dhash_images(
-                    clean.select(
-                        F.col(id_col).alias("doc_id"),
-                        F.col(media_payload_col).alias("payload"),
-                    )
-                ).persist()
-                try:
-                    mpairs = simhash_neardup_pairs(
-                        fp, max_distance=3, sim_col="dhash", bits=64
-                    )
-                    mjoin_dir = (
-                        media_reps_index_dir
-                        if media_reps_index_dir is not None
-                        and path_exists(spark, media_reps_index_dir)
-                        else media_index_dir
-                    )
-                    if path_exists(spark, mjoin_dir):
-                        midx = spark.read.schema(
-                            "doc_id long, dhash long"
-                        ).parquet(mjoin_dir)
-                        mpairs = mpairs.unionByName(
-                            simhash_neardup_cross_pairs(
-                                midx, fp, max_distance=3,
-                                sim_col="dhash", bits=64,
-                            )
-                        )
-                    mpairs.distinct().write.mode("append").parquet(
-                        media_pairs_dir
-                    )
-                    fp.write.mode("append").parquet(media_index_dir)
-                    if media_reps_index_dir is not None:
-                        fp.select("doc_id", "dhash").write.mode(
-                            "append"
-                        ).parquet(media_reps_index_dir)
-                finally:
-                    fp.unpersist()
+            media_fresh = media_payload_col is not None and media.ingest(
+                clean, epoch_id, media_index_dir, media_pairs_dir,
+                media_reps_index_dir,
+            )
             # DSIR leg — model the clean corpus only
             dsir_fn(clean, epoch_id)
             # pair-store maintenance window (r12): contract the
             # accumulated stores to their spanning forest — O(|V|)
-            # rows, CC-equivalent, so drain results are unchanged
+            # rows, CC-equivalent, so drain results are unchanged.  A
+            # leg whose pairs were already written (a replay) leaves
+            # its store to the next window.
             if compact_every and (int(epoch_id) + 1) % compact_every == 0:
-                compact_pairs_to_forest(spark, pairs_dir)
-                if reps_index_dir is not None:
-                    refresh_reps_index(
-                        spark, pairs_dir, index_dir, reps_index_dir
-                    )
-                if media_pairs_dir is not None:
+                if fresh:
+                    compact_pairs_to_forest(spark, pairs_dir)
+                    if reps_index_dir is not None:
+                        refresh_reps_index(
+                            spark, pairs_dir, index_dir, reps_index_dir
+                        )
+                if media_fresh:
                     compact_pairs_to_forest(
                         spark, media_pairs_dir, a_col="doc_a", b_col="doc_b"
                     )
@@ -288,7 +213,7 @@ def curation_pipeline_batch_fn(
                         refresh_reps_index(
                             spark, media_pairs_dir, media_index_dir,
                             media_reps_index_dir,
-                            index_schema="doc_id long, dhash long",
+                            index_schema=media.index_schema,
                             index_id_col="doc_id",
                             a_col="doc_a", b_col="doc_b",
                         )
@@ -369,7 +294,7 @@ def compact_pairs_to_forest(
 ) -> dict:
     """Contract an accumulated pair store to a SPANNING FOREST of its
     graph and rewrite the store — the bounded-state companion to the
-    append-only pair sinks (SCALE.md r11: on replica-structured
+    grow-only pair sinks (SCALE.md r11: on replica-structured
     corpora the accumulated pair stores grow super-linearly, Σ over
     clusters of n_i·(n_i−1)/2, while every drain-time consumer reads
     them ONLY through connected components).  A spanning forest has
@@ -377,16 +302,16 @@ def compact_pairs_to_forest(
     rows, so ``drain(compacted store) == drain(raw store)`` while the
     store stops scaling with pair density.  Run it periodically (every
     k epochs) from the ingest loop's maintenance window; later epochs
-    keep appending raw pairs and the next compaction folds them in.
+    keep adding raw pairs and the next compaction folds them in.
 
-    Concurrency contract: the rewrite assumes NO concurrent appender —
+    Concurrency contract: the rewrite assumes NO concurrent writer —
     the ingest loop runs it BETWEEN epochs (foreachBatch hooks are
     serialized per stream by Structured Streaming, and ``compact_every``
-    fires at the end of the epoch hook, after the epoch's own append).
-    An append racing the rewrite could land rows in the pre-rename dir
+    fires at the end of the epoch hook, after the epoch's own write).
+    A write racing the rewrite could land rows in the pre-rename dir
     and be lost with it; multi-writer deployments must fence the
     maintenance window externally (pinned by
-    ``tests/test_pair_store_maintenance.py::test_compaction_runs_between_epochs``).
+    ``tests/test_reps_and_store_recovery.py::test_compaction_runs_between_epochs``).
 
     Root self-rows are dropped at the rewrite: every component in a
     PAIR store has ≥ 2 nodes, so each root still appears as the dst of
@@ -395,23 +320,22 @@ def compact_pairs_to_forest(
     ``hamming``) read back as NULL under the explicit-schema readers,
     which only ever select the id pair.
 
-    Crash safety (r13, ADVICE r12): the rewrite goes through
-    :func:`~dataengineering_spark.streaming.store.atomic_rewrite` —
-    tmp dir + rename with mechanical torn-state recovery — so a crash
-    at ANY point leaves either the old store or the new one, never a
-    partial edge set.  Returns ``{"rows_before", "rows_after",
-    "passes"}``."""
+    The rewrite is :func:`~dataengineering_spark.streaming.store.rewrite_epochs`
+    — crash-safe, and it keeps the store's highest epoch, so a replay
+    of any folded epoch still writes nothing.  Returns
+    ``{"rows_before", "rows_after", "passes"}``."""
     if not store_exists(spark, pairs_dir):
         return {"rows_before": 0, "rows_after": 0, "passes": 0}
-    edges = (
-        spark.read.schema(f"`{a_col}` long, `{b_col}` long")
-        .parquet(pairs_dir)
-        .distinct()
-        .select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    )
+    edges = read_store(
+        spark, pairs_dir, f"`{a_col}` long, `{b_col}` long"
+    ).select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     n_before = edges.count()
     if n_before == 0:
         return {"rows_before": 0, "rows_after": 0, "passes": 0}
+    # a forest pass contracts only within a partition, and the read
+    # gives one partition per store file: size them like the
+    # re-contraction passes do
+    edges = edges.repartition(max(1, n_before // _FOREST_TARGET_EDGES_PER_PART))
     cur, passes = pairs_to_forest_frame(edges, n_edges=n_before)
     out = (
         cur.filter(F.col("src") != F.col("dst"))
@@ -420,7 +344,7 @@ def compact_pairs_to_forest(
     )
     cur.unpersist()
     n_after = out.count()
-    atomic_rewrite(spark, out, pairs_dir)
+    rewrite_epochs(spark, out, pairs_dir)
     out.unpersist()
     return {"rows_before": n_before, "rows_after": n_after, "passes": passes}
 
@@ -439,22 +363,12 @@ def repair_accumulated_semantic_pairs(
     — and atomically rewrite the pairs store to it.  Because the
     stream's accumulated pairs provably equal the batch self-join under
     the same frozen quantizer (tests/test_streaming_semdedup.py), the
-    rewritten store equals the distinct accumulated store: a lost or
-    torn pairs store is one call away from whole again, no payload or
-    embedding re-read (the index already carries the vectors).
-    Returns the rewritten pair count."""
-    if not store_exists(spark, index_dir):
-        return 0
-    cells = (
-        spark.read.schema(CELL_INDEX_SCHEMA).parquet(index_dir).distinct()
-    )
-    pairs = semantic_candidate_pairs(cells, threshold=threshold).persist()
-    try:
-        n = pairs.count()  # materialize before touching the store
-        atomic_rewrite(spark, pairs, pairs_dir)
-    finally:
-        pairs.unpersist()
-    return n
+    rewritten store equals the accumulated store: a lost or torn pairs
+    store is one call away from whole again, no payload or embedding
+    re-read (the index already carries the vectors).  The rewrite
+    takes the index's highest epoch as its mark.  Returns the
+    rewritten pair count."""
+    return semantic_lane(None, threshold).repair(spark, index_dir, pairs_dir)
 
 
 def refresh_reps_index(
@@ -495,16 +409,15 @@ def refresh_reps_index(
     Run AFTER :func:`compact_pairs_to_forest` in the maintenance
     window: component membership is computed over the (now
     forest-sized) pair store — star rounds over O(|V|) edges — and the
-    reps index is rewritten atomically (tmp + rename).  Between
-    refreshes, the ingest loop appends each epoch's new rows to BOTH
-    indexes, so not-yet-compacted documents stay individually
-    matchable.  Returns ``{"index_rows", "reps_rows"}``."""
-    full = spark.read.schema(index_schema).parquet(index_dir).distinct()
+    reps index is rewritten atomically (tmp + rename), marked with the
+    full index's highest epoch.  Between refreshes, the ingest loop
+    writes each epoch's new rows to BOTH indexes, so not-yet-compacted
+    documents stay individually matchable.  Returns ``{"index_rows",
+    "reps_rows"}``."""
+    full = read_store(spark, index_dir, index_schema)
     if store_exists(spark, pairs_dir):
         comp = connected_components(
-            spark.read.schema(f"`{a_col}` long, `{b_col}` long")
-            .parquet(pairs_dir)
-            .distinct(),
+            read_store(spark, pairs_dir, f"`{a_col}` long, `{b_col}` long"),
             id_a=a_col,
             id_b=b_col,
             distinct_edges=False,
@@ -518,7 +431,7 @@ def refresh_reps_index(
     reps = reps.persist()
     try:
         n_reps = reps.count()  # materialize before the rewrite
-        atomic_rewrite(spark, reps, reps_index_dir)
+        rewrite_epochs(spark, reps, reps_index_dir, mark_of=index_dir)
     finally:
         reps.unpersist()
     return {"index_rows": full.count(), "reps_rows": n_reps}
@@ -592,10 +505,8 @@ def authorized_media_repair(
         repair_accumulated_pairs,
     )
 
-    index = (
-        spark.read.schema(f"`{id_col}` long, `{sim_col}` long")
-        .parquet(media_index_dir)
-        .distinct()
+    index = read_store(
+        spark, media_index_dir, f"`{id_col}` long, `{sim_col}` long"
     )
     decision = authorize_pigeonhole_cap(
         index, caps, pair_budget, max_distance=max_distance,
@@ -668,16 +579,15 @@ def curation_finish(
     from dataengineering_spark.operators.chunking import token_budget_shards
     from dataengineering_spark.operators.robust import global_discrete_pcts
 
-    clean = spark.read.parquet(clean_dir).distinct()
+    clean = read_store(spark, clean_dir)
     cents = spark.createDataFrame(
         [(int(cid), [float(x) for x in cv]) for cid, cv in cent_rows],
         "cid INT, cv ARRAY<DOUBLE>",
     )
     cells = persist_tracked(
-        spark.read.schema(CELL_INDEX_SCHEMA)
-        .parquet(index_dir)
-        .distinct()  # absorb epoch replays
-        .join(F.broadcast(cents), "cid")
+        read_store(spark, index_dir, CELL_INDEX_SCHEMA).join(
+            F.broadcast(cents), "cid"
+        )
     )
     pairs = accumulated_semantic_pairs(spark, pairs_dir)
     surv_ids = semantic_survivor_ids(cells, pairs)
@@ -694,12 +604,7 @@ def curation_finish(
         # canonical could eliminate every member of a cluster. A doc
         # dropped here can still have surviving text/embedding — the
         # point of running the media leg at all.
-        mpairs = (
-            spark.read.schema("doc_a long, doc_b long, hamming int")
-            .parquet(media_pairs_dir)
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
+        mpairs = read_store(spark, media_pairs_dir, "doc_a long, doc_b long")
         mcomp = connected_components(mpairs, distinct_edges=False)
         present = mcomp.join(
             survivors.select(F.col(id_col).alias("doc_id")), "doc_id"

@@ -4,25 +4,17 @@ completing the streaming story the exact/content tier started in
 ``streaming/dedup.py``.
 
 Shape: a persisted BAND INDEX (parquet table of (doc_id, band_id,
-band_sig) rows, exactly ``operators/dedup.lsh_bands`` output) plus a
-``foreachBatch`` loop.  Each micro-batch:
+band_sig) rows, exactly ``operators/dedup.lsh_bands`` output) bound to
+:class:`~dataengineering_spark.streaming.store.IndexLane`: intra-epoch
+pairs come from the banded self-join (the ``minhash_lsh_pairs``
+equi-join shape, never all-pairs), cross-epoch pairs from the index
+joined against the BROADCAST batch bands (the
+``incremental_lsh_matches`` scale shape: the 100 TB index is filtered
+map-side and never shuffles).
 
-1. computes the batch's band frame ONCE (persisted for the epoch);
-2. emits intra-batch candidate pairs via the banded self-join — the
-   same equi-join shape as ``minhash_lsh_pairs``, never all-pairs;
-3. emits cross-batch candidates by joining the persisted index against
-   the BROADCAST batch bands — the ``incremental_lsh_matches`` scale
-   shape (``operators/dedup.py:663``): the 100 TB index is filtered
-   map-side and never shuffles;
-4. appends the batch bands to the index, so later batches see them.
-
-Because every document belongs to exactly one epoch, each (a, b) pair
-surfaces exactly once: intra-batch if both docs share an epoch, else
-cross-batch in the LATER doc's epoch.  Accumulated pairs over a
-drained stream therefore equal batch ``minhash_lsh_pairs`` on the
-whole corpus — proven stream==batch in
-``tests/test_streaming_lsh.py``, the same proof style as the content
-tier's ``test_streaming_dedup.py``.
+Accumulated pairs over a drained stream equal batch
+``minhash_lsh_pairs`` on the whole corpus — proven stream==batch in
+``tests/test_streaming_lsh.py``.
 
 State posture at scale: the band index grows with the corpus (that is
 inherent — near-dup screening must remember everything it may match
@@ -50,7 +42,7 @@ from dataengineering_spark.operators.dedup import (
     lsh_bands,
     minhash_signatures,
 )
-from dataengineering_spark.streaming.store import path_exists
+from dataengineering_spark.streaming.store import IndexLane, read_store
 
 INDEX_SCHEMA = "doc_id long, band_id int, band_sig string"
 
@@ -119,44 +111,20 @@ def lsh_neardup_batch_fn(
     shingle_n: int = DEFAULT_SHINGLE,
 ):
     """Build the foreachBatch function: per epoch, emit new candidate
-    pairs to ``pairs_dir`` and append the epoch's bands to the
-    ``index_dir`` band table.
-
-    The index append happens AFTER the pair write within the epoch;
-    foreachBatch replays a failed epoch, and both writes are appends of
-    deterministic content keyed by the epoch's docs, so replays
-    re-append the same rows — downstream consumers dedup pairs with
-    ``distinct()`` exactly as they already must for multi-band hits.
-    """
-
-    def batch_fn(batch: DataFrame, epoch_id: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        bands_df = _band_frame(
+    pairs to ``pairs_dir`` and add the epoch's bands to the
+    ``index_dir`` band table."""
+    return IndexLane(
+        keys_fn=lambda batch: _band_frame(
             batch, id_col, text_col, num_hashes, bands, shingle_n
-        ).persist()
-        try:
-            pairs = _intra_pairs(bands_df, id_col)
-            if path_exists(spark, index_dir):
-                index_bands = spark.read.schema(INDEX_SCHEMA).parquet(index_dir)
-                pairs = pairs.unionByName(
-                    _cross_pairs(index_bands, bands_df, id_col)
-                )
-            pairs.distinct().write.mode("append").parquet(pairs_dir)
-            bands_df.write.mode("append").parquet(index_dir)
-        finally:
-            bands_df.unpersist()
-
-    return batch_fn
+        ),
+        intra_fn=lambda keys: _intra_pairs(keys, id_col),
+        cross_fn=lambda index, keys: _cross_pairs(index, keys, id_col),
+        index_schema=INDEX_SCHEMA,
+    ).batch_fn(index_dir, pairs_dir)
 
 
 def accumulated_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
-    """Distinct accumulated (doc_a, doc_b) candidates from a drained
-    (or live) stream's pair sink — the frame to compare against batch
+    """Accumulated (doc_a, doc_b) candidates from a drained (or live)
+    stream's pair sink — the frame to compare against batch
     ``minhash_lsh_pairs`` or to feed ``jaccard_pairs``."""
-    return (
-        spark.read.schema("doc_a long, doc_b long")
-        .parquet(pairs_dir)
-        .distinct()
-    )
+    return read_store(spark, pairs_dir, "doc_a long, doc_b long")

@@ -6,22 +6,15 @@ tier's ``streaming/lsh.py`` and the embedding tier's
 
 Shape: a persisted FINGERPRINT INDEX (parquet table of (doc_id, fp)
 rows — 16 bytes per media object, the smallest possible dedup state)
-plus a ``foreachBatch`` loop. Each micro-batch:
+bound to :class:`~dataengineering_spark.streaming.store.IndexLane`:
+the epoch's payloads run the Arrow-batched fingerprint lane ONCE,
+intra-epoch pairs come from the pigeonhole chunk self-join
+(``simhash_neardup_pairs`` — never all-pairs), cross-epoch pairs from
+the index joined against the BROADCAST batch fingerprints
+(``simhash_neardup_cross_pairs``).
 
-1. decodes the epoch's payloads through the Arrow-batched fingerprint
-   lane ONCE (persisted for the epoch);
-2. emits intra-batch pairs via the pigeonhole chunk self-join
-   (``simhash_neardup_pairs`` — never all-pairs);
-3. emits cross-batch pairs by joining the persisted index against the
-   BROADCAST batch fingerprints (``simhash_neardup_cross_pairs``):
-   the index is filtered map-side and never shuffles;
-4. appends the batch fingerprints to the index.
-
-Every media object belongs to exactly one epoch, so each (a, b) pair
-surfaces exactly once — intra-batch if the docs share an epoch, else
-cross-batch in the later doc's epoch. Accumulated pairs over a
-drained stream therefore equal the batch fingerprint + chunk-join
-pipeline over the whole corpus — proven stream==batch in
+Accumulated pairs over a drained stream equal the batch fingerprint
++ chunk-join pipeline over the whole corpus — proven stream==batch in
 ``tests/test_streaming_media_dedup.py``.
 
 State posture at scale: the index grows with the corpus (inherent for
@@ -39,13 +32,33 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from dataengineering_spark.operators.dedup import (
     simhash_neardup_cross_pairs,
     simhash_neardup_pairs,
+    video_neardup_cross_pairs,
+    video_neardup_pairs,
 )
-from dataengineering_spark.streaming.store import atomic_rewrite, path_exists
+from dataengineering_spark.streaming.store import IndexLane, read_store
+
+
+def media_lane(
+    hasher: Callable[[DataFrame], DataFrame],
+    sim_col: str,
+    bits: int,
+    max_distance: int = 3,
+    id_col: str = "doc_id",
+) -> IndexLane:
+    """The (id, fingerprint) index of one ``hasher`` as an
+    :class:`IndexLane`."""
+    kw = dict(max_distance=max_distance, id_col=id_col, sim_col=sim_col,
+              bits=bits)
+    return IndexLane(
+        keys_fn=hasher,
+        intra_fn=lambda fp: simhash_neardup_pairs(fp, **kw),
+        cross_fn=lambda index, fp: simhash_neardup_cross_pairs(index, fp, **kw),
+        index_schema=f"`{id_col}` long, `{sim_col}` long",
+    )
 
 
 def media_neardup_batch_fn(
@@ -62,11 +75,6 @@ def media_neardup_batch_fn(
     ``audio_fingerprints`` -> sim_col='afp', bits=64) — any
     (id, fingerprint) producer with the pigeonhole bit contract works.
 
-    Replay contract: both writes are appends of deterministic
-    functions of the epoch's payloads, so foreachBatch replays
-    re-append identical rows; accumulation readers apply
-    ``distinct()`` — the streaming/lsh.py contract.
-
     Deliberately NOT exposed here: the batch lanes'
     ``max_bucket_size`` hot-bucket cap (r10). Capping is a function
     of WHOLE-CORPUS bucket sizes; an incremental index only sees a
@@ -80,43 +88,14 @@ def media_neardup_batch_fn(
     :func:`repair_accumulated_pairs` / :func:`repair_accumulated_video_pairs`
     implement that pass (r11), re-pairing from the 16 B/object index
     with no payload re-decode."""
-
-    def batch_fn(batch: DataFrame, epoch_id: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        fp = hasher(batch).persist()
-        try:
-            pairs = simhash_neardup_pairs(
-                fp, max_distance=max_distance, id_col=id_col,
-                sim_col=sim_col, bits=bits,
-            )
-            if path_exists(spark, index_dir):
-                index = spark.read.schema(
-                    f"`{id_col}` long, `{sim_col}` long"
-                ).parquet(index_dir)
-                pairs = pairs.unionByName(
-                    simhash_neardup_cross_pairs(
-                        index, fp, max_distance=max_distance,
-                        id_col=id_col, sim_col=sim_col, bits=bits,
-                    )
-                )
-            pairs.distinct().write.mode("append").parquet(pairs_dir)
-            fp.write.mode("append").parquet(index_dir)
-        finally:
-            fp.unpersist()
-
-    return batch_fn
+    return media_lane(hasher, sim_col, bits, max_distance, id_col).batch_fn(
+        index_dir, pairs_dir
+    )
 
 
 def accumulated_media_pairs(spark, pairs_dir: str) -> DataFrame:
-    """Distinct accumulated (doc_a, doc_b, hamming) pairs — the replay
-    dedup the append contract requires."""
-    return (
-        spark.read.schema("doc_a long, doc_b long, hamming int")
-        .parquet(pairs_dir)
-        .distinct()
-    )
+    """Accumulated (doc_a, doc_b, hamming) pairs."""
+    return read_store(spark, pairs_dir, "doc_a long, doc_b long, hamming int")
 
 
 def repair_accumulated_pairs(
@@ -142,25 +121,15 @@ def repair_accumulated_pairs(
     Price before running: ``pigeonhole_bucket_stats`` over the same
     index reports exactly what the cap forfeits (O(#buckets)), and
     ``require_survivor_budget`` + ``sample_verify_rate`` bound the
-    survivor volume this pass will materialize. The pairs store is
-    derived state — recomputable from the index — and the rewrite is
-    atomic (streaming/store.py tmp + rename, r13): a crash at any
-    point leaves the old pair set or the new one, never a partial."""
-    index = (
-        spark.read.schema(f"`{id_col}` long, `{sim_col}` long")
-        .parquet(index_dir)
-        .distinct()  # foreachBatch replays re-append identical rows
+    survivor volume this pass will materialize. The rewrite is
+    :meth:`~dataengineering_spark.streaming.store.IndexLane.repair`."""
+    return media_lane(None, sim_col, bits, max_distance, id_col).repair(
+        spark, index_dir, pairs_dir,
+        lambda index: simhash_neardup_pairs(
+            index, max_distance=max_distance, id_col=id_col, sim_col=sim_col,
+            bits=bits, max_bucket_size=max_bucket_size,
+        ),
     )
-    pairs = simhash_neardup_pairs(
-        index, max_distance=max_distance, id_col=id_col, sim_col=sim_col,
-        bits=bits, max_bucket_size=max_bucket_size,
-    ).persist()
-    try:
-        n = pairs.count()  # materialize before touching the store
-        atomic_rewrite(spark, pairs, pairs_dir)
-    finally:
-        pairs.unpersist()
-    return n
 
 
 def repair_accumulated_video_pairs(
@@ -176,22 +145,38 @@ def repair_accumulated_video_pairs(
     accumulated (doc_id, slot, dhash) frame-hash index with the
     per-(slot, chunk, value) hot-bucket cap and atomically rewrites
     the pairs store to the capped-batch (doc_a, doc_b, n_match) set."""
-    from dataengineering_spark.operators.dedup import video_neardup_pairs
-    index = (
-        spark.read.schema(f"`{id_col}` long, slot int, dhash long")
-        .parquet(index_dir)
-        .distinct()
+    return video_lane(
+        max_distance=max_distance, min_matching=min_matching, id_col=id_col
+    ).repair(
+        spark, index_dir, pairs_dir,
+        lambda index: video_neardup_pairs(
+            index, max_distance=max_distance, min_matching=min_matching,
+            id_col=id_col, max_bucket_size=max_bucket_size,
+        ),
     )
-    pairs = video_neardup_pairs(
-        index, max_distance=max_distance, min_matching=min_matching,
-        id_col=id_col, max_bucket_size=max_bucket_size,
-    ).persist()
-    try:
-        n = pairs.count()
-        atomic_rewrite(spark, pairs, pairs_dir)
-    finally:
-        pairs.unpersist()
-    return n
+
+
+def video_lane(
+    n_samples: int = 4,
+    max_distance: int = 3,
+    min_matching: int = 3,
+    id_col: str = "doc_id",
+    payload_col: str = "payload",
+) -> IndexLane:
+    """The (doc_id, slot, dhash) frame-hash index as an
+    :class:`IndexLane`."""
+    from dataengineering_spark.functions.multimodal import video_frame_hashes
+
+    kw = dict(max_distance=max_distance, min_matching=min_matching,
+              id_col=id_col)
+    return IndexLane(
+        keys_fn=lambda batch: video_frame_hashes(
+            batch, n_samples=n_samples, id_col=id_col, payload_col=payload_col
+        ),
+        intra_fn=lambda fh: video_neardup_pairs(fh, **kw),
+        cross_fn=lambda index, fh: video_neardup_cross_pairs(index, fh, **kw),
+        index_schema=f"`{id_col}` long, slot int, dhash long",
+    )
 
 
 def video_neardup_batch_fn(
@@ -204,57 +189,16 @@ def video_neardup_batch_fn(
     payload_col: str = "payload",
 ):
     """foreachBatch hook for the VIDEO modality — the image/audio
-    incremental loop with a per-video frame-hash SET as state
-    (``n_samples`` longs per video instead of one): the epoch's
-    payloads run the sampled-frame decode lane once, intra-batch
-    pairs come from the slot-aligned pigeonhole self-join
-    (``video_neardup_pairs``), cross-batch pairs from the broadcast
-    join against the persisted frame-hash index
-    (``video_neardup_cross_pairs``), then the epoch's hashes append to
-    the index. Same exactly-once shape as media_neardup_batch_fn: a
-    video's whole fingerprint lands in its one epoch, so every pair
-    surfaces exactly once and accumulated pairs equal the batch plan
-    (distinct() on read absorbs foreachBatch replays)."""
-    from dataengineering_spark.functions.multimodal import video_frame_hashes
-    from dataengineering_spark.operators.dedup import (
-        video_neardup_cross_pairs,
-        video_neardup_pairs,
-    )
-
-    def batch_fn(batch: DataFrame, epoch_id: int) -> None:
-        if not batch.take(1):
-            return
-        spark = batch.sparkSession
-        fh = video_frame_hashes(
-            batch, n_samples=n_samples, id_col=id_col, payload_col=payload_col
-        ).persist()
-        try:
-            pairs = video_neardup_pairs(
-                fh, max_distance=max_distance, min_matching=min_matching,
-                id_col=id_col,
-            )
-            if path_exists(spark, index_dir):
-                index = spark.read.schema(
-                    f"`{id_col}` long, slot int, dhash long"
-                ).parquet(index_dir)
-                pairs = pairs.unionByName(
-                    video_neardup_cross_pairs(
-                        index, fh, max_distance=max_distance,
-                        min_matching=min_matching, id_col=id_col,
-                    )
-                )
-            pairs.distinct().write.mode("append").parquet(pairs_dir)
-            fh.write.mode("append").parquet(index_dir)
-        finally:
-            fh.unpersist()
-
-    return batch_fn
+    lane with a per-video frame-hash SET as state (``n_samples`` longs
+    per video instead of one), paired by the slot-aligned pigeonhole
+    joins (``video_neardup_pairs`` / ``video_neardup_cross_pairs``).
+    A video's whole fingerprint lands in its one epoch, so
+    accumulated pairs equal the batch plan."""
+    return video_lane(
+        n_samples, max_distance, min_matching, id_col, payload_col
+    ).batch_fn(index_dir, pairs_dir)
 
 
 def accumulated_video_pairs(spark, pairs_dir: str) -> DataFrame:
-    """Distinct accumulated (doc_a, doc_b, n_match) video pairs."""
-    return (
-        spark.read.schema("doc_a long, doc_b long, n_match int")
-        .parquet(pairs_dir)
-        .distinct()
-    )
+    """Accumulated (doc_a, doc_b, n_match) video pairs."""
+    return read_store(spark, pairs_dir, "doc_a long, doc_b long, n_match int")

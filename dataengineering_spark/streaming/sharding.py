@@ -18,9 +18,9 @@ far — kept in an EPOCH-KEYED atomic JSON log (tmp+rename, the
   (its internal RangePartitioner prefix-sum machinery unchanged),
   shifts ``cum_before`` by ``base``, and re-derives
   ``seq_id``/``offset_in_seq`` with the batch expressions verbatim;
-- appends the assignment rows and commits ``base + epoch_total``
-  under key k — idempotent on replay because the recomputed value is
-  identical.
+- writes the assignment rows as epoch k (streaming/store.py) and
+  commits ``base + epoch_total`` under key k — idempotent on replay
+  because the recomputed value is identical.
 
 Stream == batch holds when epochs arrive as contiguous,
 non-interleaved ``order_col`` blocks — exactly the log-ingestion
@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineering_spark.operators.chunking import token_budget_shards
+from dataengineering_spark.streaming.store import read_store, write_epoch
 
 
 def _state_dir(root: str) -> str:
@@ -107,7 +108,7 @@ def token_shards_batch_fn(
                 .withColumn("seq_id", F.expr(f"cum_before DIV {budget}"))
                 .withColumn("offset_in_seq", F.col("cum_before") % budget)
             )
-            shifted.write.mode("append").parquet(out_dir)
+            write_epoch(shifted, out_dir, epoch_id)
             total = batch.agg(F.sum(size_col)).collect()[0][0] or 0
         _commit(state_root, int(epoch_id), int(base), int(total))
 
@@ -115,5 +116,5 @@ def token_shards_batch_fn(
 
 
 def accumulated_shards(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Distinct accumulated shard assignments from a drained stream."""
-    return spark.read.parquet(out_dir).distinct()
+    """Accumulated shard assignments from a drained stream."""
+    return read_store(spark, out_dir)

@@ -1,9 +1,21 @@
-"""Crash-safe rewrite protocol for the streaming tier's parquet state
-stores (pair stores, fingerprint/cell indexes, reps indexes), and the
-one epoch store of the mergeable-partials lanes (:class:`PartialsLane`).
+"""The epoch stores of the streaming tier — pair stores, fingerprint /
+cell / band indexes, reps indexes, result and routing sinks, and the
+mergeable-partials stores — and their crash-safe rewrite protocol.
 
-The accumulated stores are APPEND-only during ingest, but the
-maintenance operations — pair-store compaction
+Replay contract, stated once for every store written here:
+
+- one epoch per partition: epoch N lands in ``epoch_id=N`` through
+  :func:`write_epoch` (the idempotent partition reload of
+  :func:`~dataengineering_spark.sources.io.flush_partitions`);
+- a replay writes nothing: a store holding an epoch >= N skips epoch
+  N, so readers need no replay ``distinct()``;
+- rewrites keep the highest epoch: a compaction, repair or refresh
+  lands in the partition of the highest epoch it absorbed
+  (:func:`rewrite_epochs`), so replays of those still write nothing;
+- a store belongs to one checkpoint: epoch ids restart at 0 on a
+  fresh checkpoint, and its epochs would read as replays.
+
+The maintenance operations — pair-store compaction
 (``curation.compact_pairs_to_forest``), the capped re-pair passes
 (``media_dedup.repair_accumulated_pairs``), and the reps-index refresh
 — REWRITE a store wholesale.  A bare ``mode("overwrite")`` on the live
@@ -22,7 +34,7 @@ the completion marker below still closes the torn-read window):
 4. delete the old dir.
 
 Every window has a mechanical recovery, run by :func:`recover_store`
-(callers invoke it before reading or rewriting a maintained store):
+(every epoch write and store read here invokes it first):
 
 - crash during 1: live store intact; stale tmp (no ``_SUCCESS`` or
   simply superseded) is deleted on the next pass.
@@ -64,21 +76,14 @@ def _p(jvm, path: str):
     return jvm.org.apache.hadoop.fs.Path(path)
 
 
-def path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FS API so it works on any
-    filesystem the session can read (local, HDFS, object stores) —
-    reading a nonexistent parquet path fails lazily at action time,
-    too late to branch on."""
-    jvm, fs = _fs(spark, path)
-    return fs.exists(_p(jvm, path))
-
-
 def store_exists(spark: SparkSession, path: str) -> bool:
-    """:func:`path_exists` for maintained stores: runs crash recovery
-    first, so a store torn by a mid-rewrite crash reads as its
+    """Existence probe through the Hadoop FS API (reading a missing
+    parquet path fails lazily, too late to branch on), after crash
+    recovery — so a store torn by a mid-rewrite crash reads as its
     recovered self, never as absent/partial."""
     recover_store(spark, path)
-    return path_exists(spark, path)
+    jvm, fs = _fs(spark, path)
+    return fs.exists(_p(jvm, path))
 
 
 def recover_store(spark: SparkSession, path: str) -> str:
@@ -154,13 +159,49 @@ EPOCH_COL = "epoch_id"
 
 
 def _epochs(spark: SparkSession, path: str) -> list[int]:
-    """Epoch ids held by a partials store, read from its
-    ``epoch_id=N`` directory names — a Hadoop FS listing, not a Spark
-    job.  A dynamic partition overwrite renames the partition into
-    place at job commit, so a listed epoch is a complete one."""
+    """Epoch ids held by a store, read from its ``epoch_id=N``
+    directory names — a Hadoop FS listing, not a Spark job.  A dynamic
+    partition overwrite renames the partition into place at job
+    commit, so a listed epoch is a complete one."""
     jvm, fs = _fs(spark, path)
     found = fs.globStatus(_p(jvm, f"{path}/{EPOCH_COL}=*")) or []
     return [int(st.getPath().getName().split("=", 1)[1]) for st in found]
+
+
+def _mark(spark: SparkSession, path: str) -> int:
+    """The highest epoch a store holds (-1 for none), after recovery."""
+    recover_store(spark, path)
+    return max(_epochs(spark, path), default=-1)
+
+
+def write_epoch(frame: DataFrame, path: str, epoch_id: int,
+                partition_by: Sequence[str] = ()) -> None:
+    """Write ``frame`` as epoch ``epoch_id`` of the store at ``path``
+    (laid out ``epoch_id=N/<partition_by>``), unless the store already
+    holds that epoch or a later one."""
+    if _mark(frame.sparkSession, path) < int(epoch_id):
+        flush_partitions(frame.withColumn(EPOCH_COL, F.lit(int(epoch_id))),
+                         path, [EPOCH_COL, *partition_by])
+
+
+def rewrite_epochs(spark: SparkSession, frame: DataFrame, path: str,
+                   mark_of: str | None = None) -> None:
+    """Replace the store at ``path`` with ``frame`` through
+    :func:`atomic_rewrite`, in the partition of the highest epoch of
+    ``mark_of`` — the store it was derived from, by default ``path``
+    itself.  ``frame`` must not read ``path`` lazily."""
+    mark = _mark(spark, mark_of or path)
+    atomic_rewrite(spark, frame.withColumn(EPOCH_COL, F.lit(mark)), path,
+                   partition_by=[EPOCH_COL])
+
+
+def read_store(spark: SparkSession, path: str,
+               schema: str | None = None) -> DataFrame:
+    """The rows of a store (under ``schema`` when given) without its
+    epoch column, after crash recovery."""
+    recover_store(spark, path)
+    reader = spark.read.schema(schema) if schema else spark.read
+    return reader.parquet(path).drop(EPOCH_COL)
 
 
 @dataclass(frozen=True)
@@ -171,18 +212,7 @@ class PartialsLane:
     ``partial_fn(batch)`` reduces one micro-batch to a small partial
     frame; ``fold_fn(partials)`` merges any set of partials into one
     frame of the SAME shape (sums of counts, unions of sketches), so
-    a fold of folds equals the fold of the originals.
-
-    Replay contract, stated once for all four lanes:
-
-    - one epoch per partition: epoch N lands in ``epoch_id=N`` through
-      :func:`~dataengineering_spark.sources.io.flush_partitions`;
-    - a replay writes nothing: when the store already holds an epoch
-      >= N (N itself, or a compaction past it), the epoch is already
-      counted, so the snapshot needs no replay ``distinct()``;
-    - a store belongs to one checkpoint: epoch ids restart at 0 on a
-      fresh checkpoint, and its epochs would read as replays.
-    """
+    a fold of folds equals the fold of the originals."""
 
     partial_fn: Callable[[DataFrame], DataFrame]
     fold_fn: Callable[[DataFrame], DataFrame]
@@ -195,34 +225,92 @@ class PartialsLane:
         partition, unless the store already holds it."""
 
         def batch_fn(batch: DataFrame, epoch_id: int) -> None:
-            if not batch.take(1):
-                return
-            spark = batch.sparkSession
-            recover_store(spark, path)
-            if max(_epochs(spark, path), default=-1) >= epoch_id:
-                return
-            flush_partitions(self.epoch_partial(batch, epoch_id), path,
-                             [EPOCH_COL])
+            if batch.take(1):
+                write_epoch(self.partial_fn(batch), path, epoch_id)
 
         return batch_fn
 
     def snapshot(self, spark: SparkSession, path: str) -> DataFrame:
         """The fold of every epoch in the store."""
-        recover_store(spark, path)
-        return self.fold_fn(spark.read.parquet(path))
+        return self.fold_fn(read_store(spark, path))
 
     def compact(self, spark: SparkSession, path: str) -> None:
-        """Fold every epoch into the partition of the highest one, so
-        the store shrinks to one partial and still rejects replays of
-        every epoch it absorbed.  Crash-safe through
-        :func:`atomic_rewrite`; like every store rewrite, it runs while
-        no query is writing the store."""
+        """Fold every epoch into one partial, kept at the highest
+        epoch."""
         folded = self.snapshot(spark, path).localCheckpoint(eager=True)
-        last = max(_epochs(spark, path))
-        atomic_rewrite(
-            spark,
-            folded.withColumn(EPOCH_COL, F.lit(last)),
-            path,
-            partition_by=[EPOCH_COL],
-        )
+        rewrite_epochs(spark, folded, path)
         folded.unpersist()
+
+
+@dataclass(frozen=True)
+class IndexLane:
+    """The epoch loop every near-dup lane shares (LSH bands, SemDeDup
+    cells, image/audio fingerprints, video frame hashes): a grow-only
+    INDEX of per-object keys plus a PAIR store.
+
+    ``keys_fn(batch)`` computes the epoch's keys (the index rows);
+    ``intra_fn(keys)`` pairs them with each other; ``cross_fn(index,
+    keys)`` pairs them against the index, keys side broadcast so the
+    index is filtered map-side and never shuffles.  Every object
+    arrives in exactly one epoch, so each pair surfaces exactly once —
+    intra-epoch, or cross-epoch in the later object's epoch — and the
+    accumulated pairs equal the batch self-join over the corpus."""
+
+    keys_fn: Callable[[DataFrame], DataFrame]
+    intra_fn: Callable[[DataFrame], DataFrame]
+    cross_fn: Callable[[DataFrame, DataFrame], DataFrame]
+    index_schema: str
+
+    def ingest(self, batch: DataFrame, epoch_id: int, index_dir: str,
+               pairs_dir: str, reps_dir: str | None = None) -> bool:
+        """One epoch: pairs first — against the reps index ``reps_dir``
+        when it exists, else the index — then the keys into the index
+        and ``reps_dir``.  Pairs are computed only when the pair store
+        lacks the epoch, so a replay after a crash between the writes
+        only completes the index.  Returns whether the pairs were new."""
+        spark = batch.sparkSession
+        keys = self.keys_fn(batch).persist()
+        try:
+            fresh = _mark(spark, pairs_dir) < int(epoch_id)
+            if fresh:
+                join_dir = index_dir
+                if reps_dir is not None and store_exists(spark, reps_dir):
+                    join_dir = reps_dir
+                pairs = self.intra_fn(keys)
+                if store_exists(spark, join_dir):
+                    index = read_store(spark, join_dir, self.index_schema)
+                    pairs = pairs.unionByName(self.cross_fn(index, keys))
+                # within the epoch one pair can match on several bands,
+                # chunks or slots
+                write_epoch(pairs.distinct(), pairs_dir, epoch_id)
+            for d in filter(None, (index_dir, reps_dir)):
+                write_epoch(keys, d, epoch_id)
+        finally:
+            keys.unpersist()
+        return fresh
+
+    def batch_fn(self, index_dir: str, pairs_dir: str):
+        """foreachBatch hook over :meth:`ingest`."""
+
+        def batch_fn(batch: DataFrame, epoch_id: int) -> None:
+            if batch.take(1):
+                self.ingest(batch, epoch_id, index_dir, pairs_dir)
+
+        return batch_fn
+
+    def repair(self, spark: SparkSession, index_dir: str, pairs_dir: str,
+               pairs_fn: Callable[[DataFrame], DataFrame] | None = None) -> int:
+        """Rewrite the pair store to ``pairs_fn`` (default
+        ``intra_fn``) over the whole index, marked with the index's
+        highest epoch — the pair store may be gone.  Returns the pair
+        count (0, writing nothing, when there is no index)."""
+        if not store_exists(spark, index_dir):
+            return 0
+        index = read_store(spark, index_dir, self.index_schema)
+        pairs = (pairs_fn or self.intra_fn)(index).persist()
+        try:
+            n = pairs.count()  # materialize before touching the store
+            rewrite_epochs(spark, pairs, pairs_dir, mark_of=index_dir)
+        finally:
+            pairs.unpersist()
+        return n

@@ -26,6 +26,7 @@ from dataengineering_spark.streaming.curation import (
 from dataengineering_spark.streaming.semdedup import (
     accumulated_semantic_pairs,
 )
+from dataengineering_spark.streaming.store import write_epoch
 
 
 def _replica_pairs() -> list[tuple[int, int]]:
@@ -62,10 +63,10 @@ def test_compact_pairs_to_forest_preserves_drain(spark, tmp_path):
     pairs = _replica_pairs()
     pairs_dir = str(tmp_path / "pairs")
     df = spark.createDataFrame(pairs, "vec_a long, vec_b long")
-    # append twice: the store accumulates replayed epochs (the raw
-    # stores are append-only and readers distinct() them)
-    df.write.mode("append").parquet(pairs_dir)
-    df.write.mode("append").parquet(pairs_dir)
+    # write epoch 0 twice: the second write is a replay and writes
+    # nothing
+    write_epoch(df, pairs_dir, 0)
+    write_epoch(df, pairs_dir, 0)
 
     raw_labels = _labels(spark, pairs_dir)
     nodes = sorted({n for p in pairs for n in p})
@@ -84,7 +85,7 @@ def test_compact_pairs_to_forest_preserves_drain(spark, tmp_path):
     }
 
     stats = compact_pairs_to_forest(spark, pairs_dir)
-    assert stats["rows_before"] == len(pairs)  # distinct absorbed the replay
+    assert stats["rows_before"] == len(pairs)  # the replay wrote nothing
     assert stats["rows_after"] < stats["rows_before"]
     assert stats["rows_after"] <= len(nodes)  # forest is O(|V|)
 
@@ -95,12 +96,12 @@ def test_compact_pairs_to_forest_preserves_drain(spark, tmp_path):
     }
     assert got_survivors == raw_survivors
 
-    # periodic usage: new epochs append MORE pairs after a compaction;
+    # periodic usage: new epochs add MORE pairs after a compaction;
     # a later compaction still preserves the merged component structure
     extra = spark.createDataFrame(
         [(0, 200), (200, 201), (58, 59)], "vec_a long, vec_b long"
     )
-    extra.write.mode("append").parquet(pairs_dir)
+    write_epoch(extra, pairs_dir, 1)
     merged_labels = _labels(spark, pairs_dir)
     stats2 = compact_pairs_to_forest(spark, pairs_dir)
     assert stats2["rows_after"] <= len(nodes) + 2

@@ -49,6 +49,7 @@ from dataengineering_spark.streaming.store import (
     atomic_rewrite,
     recover_store,
     store_exists,
+    write_epoch,
 )
 
 # ---------------------------------------------------------------------------
@@ -222,8 +223,8 @@ def test_repair_accumulated_semantic_pairs_rebuilds_store(spark, tmp_path):
     index_dir = str(tmp_path / "index")
     pairs_dir = str(tmp_path / "pairs")
     cells = _cells_frame(spark)
-    cells.write.mode("append").parquet(index_dir)
-    cells.write.mode("append").parquet(index_dir)  # epoch replay
+    write_epoch(cells, index_dir, 0)
+    write_epoch(cells, index_dir, 0)  # epoch replay
     want = {
         tuple(r)
         for r in semantic_candidate_pairs(cells, threshold=0.35)

@@ -134,8 +134,11 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
     once = sorted(
         map(tuple, accumulated_results(spark, out_path).collect())
     )
+    n_raw = spark.read.parquet(out_path).count()
     fn(epoch0, 0)  # replay after simulated failure
     twice = sorted(
         map(tuple, accumulated_results(spark, out_path).collect())
     )
     assert once == twice
+    # the replay wrote nothing: the raw store, read without distinct
+    assert spark.read.parquet(out_path).count() == n_raw

@@ -98,6 +98,25 @@ def test_ingested_corpus_serves_like_batch_union(spark, tmp_path):
     assert any(n >= BASE_MAX for _, n, _ in got)
 
 
+def test_epoch_replay_writes_nothing(spark, tmp_path):
+    """A replayed ingest epoch (foreachBatch after a failure before
+    commit) adds neither its vectors nor its per-cell counts twice."""
+    full, base, index, enc_path = _setup(spark, tmp_path)
+    stats_path = str(tmp_path / "stats")
+    fn = ann_ingest_batch_fn(
+        enc_path, index, m_sub=M, dim=DIM, stats_path=stats_path
+    )
+    lo, hi = INGEST_EPOCHS[0]
+    epoch = full.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
+    assert epoch.count() == 60
+    fn(epoch, 0)
+    fn(epoch, 0)  # replay
+    n_base = base.count()
+    assert spark.read.parquet(enc_path).count() == n_base + 60
+    stats = ingest_cell_stats(spark, stats_path)
+    assert stats.agg(F.sum("n_vectors")).collect()[0][0] == 60
+
+
 def test_cell_stats_reconcile_with_encoded_table(spark, tmp_path):
     full, base, index, enc_path = _setup(spark, tmp_path)
     _drain_ingest(spark, tmp_path, full, index, enc_path)

@@ -97,6 +97,13 @@ def test_epoch_replay_is_absorbed(spark, tmp_path):
         (r.doc_id, r.hit_ngrams, r.bench_items)
         for r in quarantined(spark, qdir).collect()
     }
+    def n_raw():
+        return tuple(
+            spark.read.parquet(d).count()
+            for d in (qdir, str(tmp_path / "clean"))
+        )
+
+    raw_before = n_raw()
     fn = decontaminate_batch_fn(
         _benchmark(docs),
         clean_dir=str(tmp_path / "clean"),
@@ -115,3 +122,5 @@ def test_epoch_replay_is_absorbed(spark, tmp_path):
         clean.select("doc_id").distinct().count()
         == clean.distinct().count()
     )
+    # the replay wrote nothing: both raw stores, read without distinct
+    assert n_raw() == raw_before

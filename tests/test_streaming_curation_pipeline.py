@@ -659,3 +659,44 @@ def test_stream_with_epoch_compaction_equals_batch(spark, tmp_path):
         .count()
     )
     assert n_rows < n_nodes  # strictly: forest edges = nodes - trees
+
+    # replay the last compacting epoch (compact_every=1: the last one),
+    # as the checkpoint would after a crash before its commit: the
+    # compacted forest keeps the epoch's mark, so nothing is written
+    # and the drain is unchanged
+    def n_raw():
+        return tuple(
+            spark.read.parquet(str(tmp_path / d)).count()
+            for d in ("pairs", "index")
+        )
+
+    raw_before = n_raw()
+    _docs, joined = _corpus(spark)
+    last = EPOCH_MOD - 1
+    curation_pipeline_batch_fn(
+        _benchmark(docs),
+        cent_rows,
+        quarantine_dir=str(tmp_path / "quarantine"),
+        clean_dir=str(tmp_path / "clean"),
+        pairs_dir=str(tmp_path / "pairs"),
+        index_dir=str(tmp_path / "index"),
+        dsir_partials_dir=str(tmp_path / "dsir"),
+        n=N_GRAM,
+        threshold=THRESHOLD,
+        compact_every=1,
+    )(joined.filter(F.col("doc_id") % EPOCH_MOD == last), last)
+    assert n_raw() == raw_before
+    replayed = _rows(
+        curation_finish(
+            spark,
+            cent_rows,
+            clean_dir=str(tmp_path / "clean"),
+            pairs_dir=str(tmp_path / "pairs"),
+            index_dir=str(tmp_path / "index"),
+            dsir_partials_dir=str(tmp_path / "dsir"),
+            select_pct=SELECT_PCT,
+            budget=BUDGET,
+        )
+    )
+    release_tracked()
+    assert replayed == got_shards

@@ -123,6 +123,7 @@ def test_epoch_replay_is_idempotent_after_distinct(spark, tmp_path):
         (r.doc_a, r.doc_b)
         for r in accumulated_pairs(spark, str(tmp_path / "pairs")).collect()
     }
+    n_raw = spark.read.parquet(str(tmp_path / "pairs")).count()
     # replay epoch 1 by hand, as the checkpoint would after a crash
     batch_fn = lsh_neardup_batch_fn(
         str(tmp_path / "index"), str(tmp_path / "pairs")
@@ -136,6 +137,8 @@ def test_epoch_replay_is_idempotent_after_distinct(spark, tmp_path):
         for r in accumulated_pairs(spark, str(tmp_path / "pairs")).collect()
     }
     assert after == before
+    # the replay wrote nothing: the raw store, read without distinct
+    assert spark.read.parquet(str(tmp_path / "pairs")).count() == n_raw
 
 
 def test_cross_join_broadcasts_batch_side(spark, tmp_path):

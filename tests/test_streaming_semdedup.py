@@ -159,6 +159,7 @@ def test_epoch_replay_is_absorbed(spark, tmp_path):
         (r.vec_a, r.vec_b)
         for r in accumulated_semantic_pairs(spark, pairs_dir).collect()
     }
+    n_raw = spark.read.parquet(pairs_dir).count()
     # replay the LAST epoch: its cells are already in the index, so the
     # replayed epoch re-emits its intra pairs and re-matches the index
     # (including itself — absorbed by the (least, greatest) ordering +
@@ -175,3 +176,5 @@ def test_epoch_replay_is_absorbed(spark, tmp_path):
         for r in accumulated_semantic_pairs(spark, pairs_dir).collect()
     }
     assert after == before
+    # the replay wrote nothing: the raw store, read without distinct
+    assert spark.read.parquet(pairs_dir).count() == n_raw

@@ -87,6 +87,7 @@ def test_epoch_replay_reproduces_not_advances(spark, tmp_path):
     docs = _drain(spark, tmp_path)
     out = str(tmp_path / "shards")
     before = _rows(accumulated_shards(spark, out))
+    n_raw = spark.read.parquet(out).count()
     fn = token_shards_batch_fn(
         str(tmp_path / "state"), out, "n_chars", "doc_id", BUDGET
     )
@@ -96,3 +97,5 @@ def test_epoch_replay_reproduces_not_advances(spark, tmp_path):
     fn(docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)), 1)
     release_tracked()
     assert _rows(accumulated_shards(spark, out)) == before
+    # the replay wrote nothing: the raw store, read without distinct
+    assert spark.read.parquet(out).count() == n_raw

@@ -18,6 +18,12 @@
 # 5. The "Not yet optimized" list in OPTIMIZATION_r14.md is the
 #    residual perf worklist; the LSH xxhash64 signature change needs
 #    its oracles re-derived first.
+# 6. A driver/distributed split goes through one small-frame gate,
+#    operators/robust.small_frame_rows, and takes no threshold
+#    argument. A test reaches the 100 TB branch with the
+#    `distributed_gates` fixture (tests/conftest.py), never with a
+#    knob, and checks both branches on NULL, empty, NaN and unicode
+#    input.
 
 .PHONY: fast test test-slow perfbench-test parity streaming bench ship
 

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataengineering_spark.functions.text import normalize_text
+from dataengineering_spark.operators import robust
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4
@@ -768,7 +769,6 @@ def connected_components(
     id_b: str = "doc_b",
     max_iterations: int = 50,
     checkpoint_every: int = 2,
-    driver_threshold: int = 500_000,
     broadcast_nodes_max: int = 4_000_000,
     distinct_edges: bool = True,
     strategy: str = "star",
@@ -786,8 +786,8 @@ def connected_components(
       zero joins), geometric re-contraction bounds the frame at
       O(|V|), then alternating large-star/small-star rounds finish on
       the forest-sized frame (``_star_rounds``) — or a driver
-      union-find endgame when the contracted forest fits under
-      ``driver_threshold``. No broadcast, no edge doubling, no O(|E|)
+      union-find endgame when the contracted forest passes the
+      small-frame gate. No broadcast, no edge doubling, no O(|E|)
       distinct; every shuffle after the contraction scan is
       O(|V|)-bounded. Int64-only internally: integral ids are cast up
       to long (labels come back as long), non-integral ids (strings,
@@ -827,16 +827,16 @@ def connected_components(
     per-round *analysis* time climbing 1 → 14 s across a 5-round
     checkpoint window, so the default cadence is every 2 rounds.
 
-    ``driver_threshold``: pair graphs at or below this edge count run
-    union-find ON THE DRIVER instead (path-compressed, then each set
-    labeled with its min member — the identical fixpoint). Every
-    distributed round costs ~1 s of scheduling overhead regardless of
-    data size, so a 1.2k-edge graph was paying 16 rounds of it (~30 s)
-    for microseconds of actual work. The gate is an explicit, counted
-    bound — 500k edges ≈ 8 MB on the driver — NOT an unbounded
-    collect: above it the distributed loop runs exactly as before (the
-    sf10 probe's 18M-pair graph stays distributed). Pass 0 to force
-    the distributed path (the fuzz suite does, to keep it covered).
+    Pair graphs of at most ``robust._EDGE_DRIVER_MAX_ROWS`` edges pass the
+    :func:`~dataengineering_spark.operators.robust.small_frame_rows`
+    gate and run union-find ON THE DRIVER instead (path-compressed,
+    then each set labeled with its min member — the identical
+    fixpoint); the sf10 probe's 18M-pair graph stays distributed.
+
+    NULL ids: a pair with a NULL endpoint names no doc (the oracle's
+    SQL joins never match NULL either), so such pairs are dropped once,
+    before the gate: a doc that appears only in such pairs gets no
+    label.
 
     JOIN-SHAPE RULE (the sf100 T=0.35 disk-death lesson, SCALE.md r8):
     the labels frame is node-sized, the edge frame is pair-sized, and
@@ -903,27 +903,12 @@ def connected_components(
     if strategy == "star" and not ids_integral:
         strategy = "minlabel"
 
-    # Driver gate in ONE bounded evaluation (r13): collect at most
-    # driver_threshold+1 edge rows — the length decides the gate, and
-    # when the graph is small the collected rows ARE the full edge
-    # list. The former count()-then-collect() pair evaluated the whole
-    # unpersisted candidate join TWICE for every below-threshold graph
-    # (the same re-evaluation class as the r11 +80 s count finding,
-    # paid by every default caller at fixture scale). Driver memory is
-    # bounded exactly as before: ≤ threshold+1 skinny rows (~8 MB at
-    # the 500k default). Above the threshold, CollectLimit stops after
-    # enough partitions yield threshold+1 rows (usually the first),
-    # and the big-graph path then runs its full count as before — it
-    # still doubles as the star path's pass-1 sizing input. A forced
-    # driver_threshold=0 (probes/fuzz) deliberately skips both — so
-    # gate-off callers own input partition sizing (documented below).
-    n_pairs = None
-    if driver_threshold:
-        head = pairs.select(id_a, id_b).limit(driver_threshold + 1).collect()
-        if len(head) > driver_threshold:
-            del head
-            n_pairs = pairs.count()
-    if driver_threshold and n_pairs is None:
+    # a NULL id names no doc (see the docstring)
+    pairs = pairs.where(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
+    head = robust.small_frame_rows(
+        pairs, [id_a, id_b], robust._EDGE_DRIVER_MAX_ROWS
+    )
+    if head is not None:
         mapping = _driver_union_find([(r[0], r[1]) for r in head])
         if ids_integral:
             schema = "doc_id long, component long"
@@ -964,15 +949,14 @@ def connected_components(
         # documented ~8M-edge / 250 MB-peak contract, repartition to the
         # 4M target first. Parquet scans at default 128 MB splits never
         # trigger this (the repartition is itself an O(|E|) shuffle —
-        # a safety valve, not the normal path). Uses the driver gate's
-        # count; callers that force driver_threshold=0 skip the gate AND
-        # this valve (the count would re-evaluate the whole pair join)
-        # and own their input partition sizing.
+        # a safety valve, not the normal path). The pair count that
+        # sizes it also feeds telemetry.
         # only pay the RDD partition probe (plan analysis + RDD
         # conversion, ~0.1-0.3 s driver latency) when the valve can
         # possibly fire: n_pairs <= MAX implies n_pairs/n_parts <= MAX
         # for every n_parts >= 1 (r14)
-        if n_pairs is not None and n_pairs > _FOREST_PASS1_MAX_PER_PART:
+        n_pairs = pairs.count()
+        if n_pairs > _FOREST_PASS1_MAX_PER_PART:
             n_parts = max(1, edges.rdd.getNumPartitions())
             if n_pairs / n_parts > _FOREST_PASS1_MAX_PER_PART:
                 edges = edges.repartition(
@@ -993,7 +977,7 @@ def connected_components(
             telemetry["n_pairs"] = n_pairs
             telemetry["n_nodes"] = n_nodes
             telemetry["forest_edge_trajectory"] = [m_edges]
-        shrink_target = max(driver_threshold, 4 * n_nodes)
+        shrink_target = max(robust._EDGE_DRIVER_MAX_ROWS, 4 * n_nodes)
         for _pass in range(4):
             if m_edges <= shrink_target:
                 break
@@ -1010,12 +994,19 @@ def connected_components(
                 m_edges = m2
                 break
             m_edges = m2
-        if driver_threshold and m_edges <= driver_threshold:
+        # the count already rules out a forest over the limit, so only a
+        # forest that may fit pays the gate's pull
+        limit = robust._EDGE_DRIVER_MAX_ROWS
+        rows = (
+            robust.small_frame_rows(forest, ["src", "dst"], limit)
+            if m_edges <= limit
+            else None
+        )
+        if rows is not None:
             # self-rows ride along, so the union-find labels singleton
             # nodes too — the mapping is already complete
             if telemetry is not None:
                 telemetry["endgame"] = "driver"
-            rows = forest.collect()
             forest.unpersist()
             mapping = _driver_union_find([(r[0], r[1]) for r in rows])
             return pairs.sparkSession.createDataFrame(

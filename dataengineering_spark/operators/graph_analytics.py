@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataengineering_spark.operators import robust
+
 MICRO = 1_000_000
 BASE_MICRO = 150_000  # (1 - d) in micro-units, d = 0.85
 DAMPING_MICRO = 850_000
@@ -134,48 +136,48 @@ def bfs_hops(
     return dist
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int,
-    n_iters: int,
-    driver_threshold: int = 500_000,
-) -> DataFrame:
+def _degrees(edge_list) -> dict:
+    deg: dict = {}
+    for a, b in edge_list:
+        deg[a] = deg.get(a, 0) + 1
+        deg[b] = deg.get(b, 0) + 1
+    return deg
+
+
+def kcore_peel(edges: DataFrame, k: int, n_iters: int) -> DataFrame:
     """(node, degree) after ``n_iters`` bounded peel rounds: each round
     drops every node with degree < ``k`` and the edges incident to it
     (fixed round count, NOT to-fixpoint — the same bounded-superstep
     contract as the unrolled-CTE oracle).
 
-    Size gate (the ``connected_components`` union-find lesson —
-    operators/dedup.py): every distributed round costs ~1 s of fixed
-    scheduling on local[32] regardless of data, so graphs at or below
-    ``driver_threshold`` edges run the peel in plain Python after ONE
-    bounded collect — identical round semantics, zero supersteps. The
-    distributed path stays the scale story (and stays test-forced via
-    driver_threshold=0): per round one explode→count aggregate and two
-    left-semi joins against the alive set, with a per-round persist so
-    the lazy plan stays linear in rounds instead of 3^rounds.
+    Graphs of at most ``robust._EDGE_DRIVER_MAX_ROWS`` edges pass the
+    :func:`~dataengineering_spark.operators.robust.small_frame_rows`
+    gate and peel in plain Python with identical round semantics and
+    zero supersteps.  The distributed path is the scale story: per
+    round one explode→count aggregate and two left-semi joins against
+    the alive set, with a per-round persist so the lazy plan stays
+    linear in rounds instead of 3^rounds.
 
-    ``edges`` must be distinct undirected (a < b) pairs.
+    ``edges`` must be distinct undirected (a < b) pairs.  A NULL
+    endpoint counts toward degree in the rounds its edge is present
+    (NULL is a group of the degree aggregate) and is never alive (the
+    semi joins never match NULL), so its edges drop in the first round.
     """
     from dataengineering_spark.caching import persist_tracked
 
+    # persisted before the gate, so the gate's pull and the distributed
+    # rounds share one evaluation of the input plan
     e = persist_tracked(edges)
-    if driver_threshold and e.count() <= driver_threshold:
-        rows = [(r[0], r[1]) for r in e.collect()]
+    rows = robust.small_frame_rows(e, ["a", "b"], robust._EDGE_DRIVER_MAX_ROWS)
+    if rows is not None:
+        edge_list = [(r[0], r[1]) for r in rows]
         for _ in range(n_iters):
-            deg: dict = {}
-            for a, b in rows:
-                deg[a] = deg.get(a, 0) + 1
-                deg[b] = deg.get(b, 0) + 1
-            alive = {n for n, d in deg.items() if d >= k}
-            rows = [(a, b) for a, b in rows if a in alive and b in alive]
-        deg = {}
-        for a, b in rows:
-            deg[a] = deg.get(a, 0) + 1
-            deg[b] = deg.get(b, 0) + 1
-        out = sorted(deg.items())
+            alive = {
+                n for n, d in _degrees(edge_list).items() if n is not None and d >= k
+            }
+            edge_list = [(a, b) for a, b in edge_list if a in alive and b in alive]
         return e.sparkSession.createDataFrame(
-            out, schema="node bigint, degree bigint"
+            list(_degrees(edge_list).items()), schema="node bigint, degree bigint"
         )
     for _ in range(n_iters):
         deg = (

@@ -214,13 +214,55 @@ def _global_pct_order_key(v):
     return (1, v)
 
 
+def small_frame_rows(df: DataFrame, cols: Sequence[str], max_rows: int):
+    """The small-frame gate: ``df``'s ``cols`` as driver rows when the
+    frame holds at most ``max_rows`` rows, else ``None``.
+
+    Gated operators run small frames on the driver, as the reference
+    runs every transform in driver-local pandas: a distributed round
+    costs ~1 s of scheduling at any size (a 1.2k-edge CC graph paid 16
+    of them).  ``None`` selects the distributed (100 TB) branch, and
+    both branches must agree, on NULL, NaN and empty input too.  ONE
+    bounded evaluation decides AND carries the data: at most
+    ``max_rows + 1`` skinny rows reach the driver.
+
+    This is the only code that picks a branch.  Callers reach it as
+    ``robust.small_frame_rows``, so the ``distributed_gates`` fixture in
+    ``tests/conftest.py`` can swap it for one that returns ``None`` and
+    force every gate down the path a frame over the limit takes.
+    """
+    rows = df.select(*cols).limit(max_rows + 1).collect()
+    return rows if len(rows) <= max_rows else None
+
+
+def sorted_rank_pcts(
+    vals: Sequence, pcts: Sequence[float], names: Sequence[str]
+) -> dict:
+    """{name: value at rank ``floor(p*(n-1))+1`` of the sorted ``vals``}
+    under Spark's ascending order (NULLs first, NaN last) — what the
+    distributed rank passes select (a tie column disambiguates ROWS,
+    never the selected VALUE).  Every name maps to ``None`` when
+    ``vals`` is empty."""
+    vals = sorted(vals, key=_global_pct_order_key)
+    n = len(vals)
+    return {
+        nm: (vals[int(p * (n - 1))] if n else None) for p, nm in zip(pcts, names)
+    }
+
+
+# small-frame gate limits: the percentile pulls hold ≤ this many
+# skinny values (~1 MB) on the driver, and the graph gates (CC, kcore)
+# ≤ this many skinny edge rows (~8 MB)
+_PCT_DRIVER_MAX_ROWS = 100_000
+_EDGE_DRIVER_MAX_ROWS = 500_000
+
+
 def global_discrete_pcts(
     df: DataFrame,
     val: str,
     tie: str,
     pcts: Sequence[float],
     names: Sequence[str],
-    driver_threshold: int = 100_000,
 ) -> dict[str, int]:
     """GLOBAL discrete percentiles of ``val`` → {name: value} on the driver.
 
@@ -236,33 +278,15 @@ def global_discrete_pcts(
     inline the returned cut values as literals (the 1-row collect is
     the same bounded class as the IVF centroid pulls).
 
-    r14 driver gate (the connected_components limit-gate idiom): ONE
-    bounded evaluation of ``limit(driver_threshold+1)`` on the val
-    column decides the path AND carries the values when the frame is
-    small — at ≤ threshold rows the collected column IS the full value
-    multiset, and the value at rank ``floor(p*(n-1))+1`` of the sorted
-    multiset is by definition what the distributed rank pass selects
-    (the tie column disambiguates ROWS, never the selected VALUE).
-    The distributed pattern above was measured at ~0.8 s on a
-    5,000-row frame (dsir_resample, sf0.1) — pure sample/shuffle/
-    two-collect overhead.  Driver memory stays bounded: ≤ threshold+1
-    skinny values (~1 MB at the default).  Above the threshold the
-    RangePartitioner path runs unchanged.
+    Frames of at most ``_PCT_DRIVER_MAX_ROWS`` rows take the
+    :func:`small_frame_rows` driver branch: the collected column IS the
+    full value multiset, and :func:`sorted_rank_pcts` picks the cuts.
     """
     from dataengineering_spark.caching import persist_tracked
 
-    if driver_threshold:
-        head = [
-            r[0] for r in df.select(val).limit(driver_threshold + 1).collect()
-        ]
-        if len(head) <= driver_threshold:
-            if not head:
-                return {nm: None for nm in names}
-            head.sort(key=_global_pct_order_key)
-            n = len(head)
-            return {
-                nm: head[int(p * (n - 1))] for p, nm in zip(pcts, names)
-            }
+    head = small_frame_rows(df, [val], _PCT_DRIVER_MAX_ROWS)
+    if head is not None:
+        return sorted_rank_pcts([r[0] for r in head], pcts, names)
 
     # three jobs (counts collect, hits collect, any caller re-read)
     # read this ranged layout — a recompute would re-sample the range

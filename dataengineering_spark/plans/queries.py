@@ -791,24 +791,17 @@ _EDITED_IN: dict[str, int] = {
     # r14 optimization-round rewrites (VERDICT r14 #1)
     "minhash_lsh": 14,
     "dup_method_agreement": 14,
-    "dedup_clusters_forest": 14,
     "blocking_quality": 14,
     "ngram_novelty": 14,
-    "dsir_resample": 14,
-    "quantile_normalize": 14,
-    "semantic_reps_incremental": 14,
     # tracked-persist release, after its r14 green
     "enrichment_pipeline": 15,
     "top_supplier": 15,
     "important_parts": 15,
-    # NULL-safe driver-gate sort for the quintile cuts
-    "rfm_segments": 15,
     # synth and decode lanes moved onto udf_registry.map_rows
     "media_durations": 15,
     "image_decode": 15,
     "image_resize": 15,
     "image_neardup": 15,
-    "image_dedup_survivors": 15,
     "image_bucket_accounting": 15,
     "image_verify_rate": 15,
     "audio_neardup": 15,
@@ -816,6 +809,21 @@ _EDITED_IN: dict[str, int] = {
     "jpeg_meta": 15,
     "frame_sample": 15,
     "pcm_stats": 15,
+    # gates routed through robust.small_frame_rows (CC and kcore drop
+    # or never keep NULL ids); pairs_to_forest_frame merges small
+    # partitions before pass 1
+    "rfm_segments": 15,
+    "dsir_resample": 15,
+    "quantile_normalize": 15,
+    "kcore_peel": 15,
+    "dedup_clusters": 15,
+    "dedup_clusters_forest": 15,
+    "dedup_survivors": 15,
+    "cluster_size_hist": 15,
+    "image_dedup_survivors": 15,
+    "semantic_reps_incremental": 15,
+    "semantic_dedup": 15,
+    "semantic_survivors": 15,
 }
 
 

@@ -44,7 +44,8 @@ from pyspark.sql import functions as F
 
 from dataengineering_spark.caching import persist_tracked
 from dataengineering_spark.catalog import read_table
-from dataengineering_spark.operators.robust import _global_pct_order_key, discrete_pcts
+from dataengineering_spark.operators import robust
+from dataengineering_spark.operators.robust import discrete_pcts
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -247,10 +248,6 @@ FROM stats WHERE n = 7
 
 _RFM_PCTS = (0.2, 0.4, 0.6, 0.8)
 _RFM_NAMES = ("c20", "c40", "c60", "c80")
-# driver-gate threshold for the quintile-cut pull: ≤ this many users
-# collect as 3 long columns (~2.4 MB) and the cuts compute in Python;
-# above it the distributed keyed rank pass runs (the 100 TB path)
-_RFM_DRIVER_MAX = 100_000
 
 
 def _score_lit(v: str, cuts: dict[str, int]):
@@ -285,29 +282,16 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver jobs. Cuts are inlined as literals, so the scoring pass
     # stays a pure narrow map: no join, no window.
     metrics = ("recency", "freq", "money")
-    # r14 driver gate (the global_discrete_pcts idiom, commit 758091b):
-    # ONE bounded limit-collect of the three metric columns decides the
-    # path AND carries the values when the user frame is small — the
-    # quintile cut per metric is by definition the value at rank
-    # floor(p·(n−1))+1 of that metric's sorted column (the user_id tie
-    # disambiguates ROWS, never the selected VALUE).  The distributed
-    # keyed rank pass below it cost ~6 jobs (range shuffle + offsets
-    # collect + hits collect) on a ~50k-row frame at sf0.1.  Driver
-    # memory stays bounded: ≤ threshold rows × 3 longs (~2.4 MB).
-    # Above the threshold the unpivot + keyed discrete_pcts pass runs
-    # unchanged — the 100 TB path.
-    head = u.select(*metrics).limit(_RFM_DRIVER_MAX + 1).collect()
-    if len(head) <= _RFM_DRIVER_MAX:
-        n = len(head)
-        cuts = {}
-        for m in metrics:
-            # NULL recency / money (a user whose every ts or value is
-            # NULL) sorts first, as in the distributed ORDER BY
-            vals = sorted((r[m] for r in head), key=_global_pct_order_key)
-            cuts[m] = {
-                nm: (vals[int(p * (n - 1))] if n else 0)
-                for p, nm in zip(_RFM_PCTS, _RFM_NAMES)
-            }
+    # small user frames (the global_discrete_pcts gate and limit): the
+    # quintile cuts per metric are sorted_rank_pcts of the collected
+    # column, with no range shuffle and no offsets / hits collects.
+    # Empty input leaves the cuts None; the census is empty regardless.
+    head = robust.small_frame_rows(u, metrics, robust._PCT_DRIVER_MAX_ROWS)
+    if head is not None:
+        cuts = {
+            m: robust.sorted_rank_pcts([r[m] for r in head], _RFM_PCTS, _RFM_NAMES)
+            for m in metrics
+        }
     else:
         unpivoted = u.select(
             F.explode(
@@ -334,12 +318,11 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=_RFM_NAMES,
             ).collect()
         }
-        # empty corpus: no percentile rows exist; the census below is
-        # empty regardless, so any literal cutoff is unreachable (same
-        # guard as q_dsir_resample / q_quantile_normalize)
+        # empty corpus: no percentile rows exist, so the cuts stay None
+        # as on the driver branch
         cuts = {
             m: {
-                nm: (cut_rows[m][nm] if m in cut_rows else 0)
+                nm: (cut_rows[m][nm] if m in cut_rows else None)
                 for nm in _RFM_NAMES
             }
             for m in metrics

@@ -39,10 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dataengineering_spark.operators.contamination import benchmark_overlap
-from dataengineering_spark.operators.dedup import (
-    _FOREST_TARGET_EDGES_PER_PART,
-    connected_components,
-)
+from dataengineering_spark.operators.dedup import connected_components
 from dataengineering_spark.streaming.dsir import (
     dsir_partials_batch_fn,
     dsir_score_against_snapshot,
@@ -236,10 +233,11 @@ def pairs_to_forest_frame(
     callers drop ``src == dst`` when they want pair-store shape.
 
     Contraction is :func:`~dataengineering_spark.operators.dedup._partition_forest`
-    — one mapInPandas scan per pass, no joins — with the same pass-1
-    partition-sizing valve as ``connected_components`` (the ~8M-edge
-    per-task memory contract) and geometric re-contraction until the
-    frame stops shrinking."""
+    — one mapInPandas scan per pass, no joins.  Small input partitions
+    are merged to the re-contraction target first, the pass-1 valve of
+    ``connected_components`` (the ~8M-edge per-task memory contract)
+    splits oversized ones, and re-contraction runs until the frame
+    stops shrinking."""
     from dataengineering_spark.operators.dedup import (
         _FOREST_PASS1_MAX_PER_PART,
         _FOREST_TARGET_EDGES_PER_PART,
@@ -248,6 +246,12 @@ def pairs_to_forest_frame(
 
     if n_edges is None:
         n_edges = edges.count()
+    # a pass contracts only within a partition, so a frame spread over
+    # many small partitions (a store read gives one per file) would stay
+    # far from a forest: merge them to the re-contraction passes' target
+    # size.  coalesce needs no shuffle and no partition probe, and does
+    # nothing when the frame already has fewer partitions.
+    edges = edges.coalesce(max(1, n_edges // _FOREST_TARGET_EDGES_PER_PART))
     # pass-1 sizing valve (same contract as connected_components):
     # mapInPandas holds a whole partition's edge arrays in task memory.
     # The RDD partition probe costs a full plan analysis + RDD
@@ -332,10 +336,6 @@ def compact_pairs_to_forest(
     n_before = edges.count()
     if n_before == 0:
         return {"rows_before": 0, "rows_after": 0, "passes": 0}
-    # a forest pass contracts only within a partition, and the read
-    # gives one partition per store file: size them like the
-    # re-contraction passes do
-    edges = edges.repartition(max(1, n_before // _FOREST_TARGET_EDGES_PER_PART))
     cur, passes = pairs_to_forest_frame(edges, n_edges=n_before)
     out = (
         cur.filter(F.col("src") != F.col("dst"))

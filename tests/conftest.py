@@ -24,6 +24,39 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def distributed_gates(monkeypatch):
+    """Force the 100 TB branch of every small-frame gate.
+
+    ``with distributed_gates() as calls:`` swaps
+    ``robust.small_frame_rows`` for a gate that always answers "over
+    the limit", so each gated operator runs its distributed branch
+    exactly as a frame over the limit would, and ``calls`` records the
+    ``(cols, max_rows)`` of every gate reached.  The edge limit drops
+    to 1 as well: CC re-contracts its forest down to ``4·|V|`` edges,
+    the target of a graph far over the limit, instead of stopping at
+    the 500k-edge limit that every test graph is already under.
+    Outside the block the gates choose by size as in production."""
+    import contextlib
+
+    from dataengineering_spark.operators import robust
+
+    @contextlib.contextmanager
+    def forced():
+        calls = []
+
+        def over_limit(df, cols, max_rows):
+            calls.append((tuple(cols), max_rows))
+            return None
+
+        with monkeypatch.context() as m:
+            m.setattr(robust, "small_frame_rows", over_limit)
+            m.setattr(robust, "_EDGE_DRIVER_MAX_ROWS", 1)
+            yield calls
+
+    return forced
+
+
 def _assert_ts_sanity(spark):
     """Canary: events.ts must decode to plausible wall-clock values.
 

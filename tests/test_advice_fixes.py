@@ -217,23 +217,75 @@ def test_discrete_pcts_pins_ranged_layout(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_kcore_peel_schema_identical_across_gate_paths(spark):
+def test_kcore_peel_schema_identical_across_gate_paths(spark, distributed_gates):
     """Round-9 ADVICE: for int-typed edge frames the distributed path
     used to leave `node` at the input dtype while the driver-gated path
-    emits bigint — the output schema flipped with edge count."""
+    emits bigint — the output schema flipped with edge count.  Both
+    branches also agree on an empty frame and on NULL endpoints (a
+    NULL counts toward degree while its edge is present and is never
+    alive, as in the distributed semi joins)."""
     from dataengineering_spark.operators.graph_analytics import kcore_peel
 
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3), (3, 4)], "a INT, b INT"
-    )
-    gated = kcore_peel(edges, k=2, n_iters=2, driver_threshold=500_000)
-    dist = kcore_peel(edges, k=2, n_iters=2, driver_threshold=0)
-    assert [f.dataType.simpleString() for f in gated.schema.fields] == [
-        f.dataType.simpleString() for f in dist.schema.fields
+    cases = [
+        ([(1, 2), (1, 3), (2, 3), (3, 4)], 2, 2, None),
+        ([], 2, 2, []),
+        ([(None, 1), (None, 2), (1, 2)], 2, 1, [(1, 1), (2, 1)]),
+        ([(None, 1), (None, 2), (1, 2)], 2, 0, [(None, 2), (1, 2), (2, 2)]),
     ]
-    assert sorted(map(tuple, gated.collect())) == sorted(
-        map(tuple, dist.collect())
-    )
+    for rows, k, n_iters, want in cases:
+        edges = spark.createDataFrame(rows, "a INT, b INT")
+        gated = kcore_peel(edges, k=k, n_iters=n_iters)
+        with distributed_gates():
+            dist = kcore_peel(edges, k=k, n_iters=n_iters)
+        assert [f.dataType.simpleString() for f in gated.schema.fields] == [
+            f.dataType.simpleString() for f in dist.schema.fields
+        ]
+        got = sorted(map(tuple, gated.collect()), key=repr)
+        assert got == sorted(map(tuple, dist.collect()), key=repr), rows
+        if want is not None:
+            assert got == sorted(want, key=repr), rows
+
+
+def test_connected_components_gate_branches_agree(spark, distributed_gates):
+    """Both branches of both CC gates give the same labels on NULL
+    endpoints (a NULL id names no doc: the pair is dropped, so 4 and 5
+    get no label), an empty frame and unicode string ids — for the star
+    and the minlabel engine."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from dataengineering_spark.operators.dedup import connected_components
+
+    def schema(t):
+        return StructType([StructField("doc_a", t), StructField("doc_b", t)])
+
+    cases = [
+        (
+            [(1, 2), (2, 3), (None, 4), (5, None), (6, 7)],
+            LongType(),
+            {(1, 1), (2, 1), (3, 1), (6, 6), (7, 6)},
+        ),
+        ([], LongType(), set()),
+        (
+            [("é", "z"), ("z", "日本"), ("ß", None), ("Ω", "ω"), ("a", "é")],
+            StringType(),
+            {("a", "a"), ("é", "a"), ("z", "a"), ("日本", "a")}
+            | {("Ω", "Ω"), ("ω", "Ω")},
+        ),
+    ]
+
+    def run(pairs, strategy):
+        out = connected_components(pairs, strategy=strategy)
+        return {tuple(r) for r in out.collect()}
+
+    for rows, t, want in cases:
+        pairs = spark.createDataFrame(rows, schema(t))
+        for strategy in ("star", "minlabel"):
+            gated = run(pairs, strategy)
+            with distributed_gates() as calls:
+                dist = run(pairs, strategy)
+            assert calls, "the forced run never reached the gate"
+            assert gated == dist, (rows, strategy)
+            assert gated == want, (rows, strategy)
 
 
 def test_dup_method_agreement_zero_not_null_on_no_pairs(spark, tmp_path):

@@ -26,13 +26,14 @@ from dataengineering_spark.operators.dedup import (
 pytestmark = pytest.mark.slow
 
 
-def _star_path(pairs, **kw):
-    # driver_threshold=0 forces the distributed engine; "star" is the
-    # default strategy, so this exercises contraction + star rounds
-    return connected_components(pairs, driver_threshold=0, **kw)
+def _star_path(distributed_gates, pairs, **kw):
+    # the fixture forces the distributed engine; "star" is the default
+    # strategy, so this exercises contraction + star rounds
+    with distributed_gates():
+        return connected_components(pairs, **kw)
 
 
-def test_star_path_matches_union_find_on_random_graphs(spark):
+def test_star_path_matches_union_find_on_random_graphs(spark, distributed_gates):
     for seed, n, m in [(3, 200, 300), (5, 500, 120), (9, 30, 900)]:
         random.seed(seed)
         edges = [
@@ -43,29 +44,40 @@ def test_star_path_matches_union_find_on_random_graphs(spark):
             edges, "doc_a long, doc_b long"
         ).repartition(7)
         expect = _driver_union_find(edges)
-        got = {r.doc_id: r.component for r in _star_path(pairs).collect()}
+        tel: dict = {}
+        got = {
+            r.doc_id: r.component
+            for r in _star_path(distributed_gates, pairs, telemetry=tel).collect()
+        }
         assert got == expect, (seed, len(got), len(expect))
+        if seed == 9:
+            # the dense graph's 7-partition forest (~7·30 rows) is over
+            # 4·|V|, so the re-contraction loop runs before the rounds
+            assert len(tel["forest_edge_trajectory"]) > 1, tel
 
 
-def test_star_path_long_chain_converges(spark):
+def test_star_path_long_chain_converges(spark, distributed_gates):
     """A diameter-300 chain: the star rounds must reach the fixpoint
     well inside max_iterations (tree heights shrink geometrically),
     and every node labels to the global min."""
     chain = [(i, i + 1) for i in range(300)]
     pairs = spark.createDataFrame(chain, "doc_a long, doc_b long")
-    got = _star_path(pairs, max_iterations=15).collect()
+    got = _star_path(distributed_gates, pairs, max_iterations=15).collect()
     assert len(got) == 301
     assert {r.component for r in got} == {0}
 
 
-def test_star_path_keeps_self_loop_singletons(spark):
+def test_star_path_keeps_self_loop_singletons(spark, distributed_gates):
     """A node whose every edge is a self-loop never reaches the
     contracted forest — it must still come back as its own
     singleton component (parity with the min-label loop)."""
     pairs = spark.createDataFrame(
         [(1, 2), (7, 7), (9, 9)], "doc_a long, doc_b long"
     )
-    got = {r.doc_id: r.component for r in _star_path(pairs).collect()}
+    got = {
+        r.doc_id: r.component
+        for r in _star_path(distributed_gates, pairs).collect()
+    }
     assert got == {1: 1, 2: 1, 7: 7, 9: 9}
 
 
@@ -111,7 +123,7 @@ def test_star_rounds_fixpoint_on_star_forest_is_immediate(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 5: 0, 10: 10, 11: 10, 12: 10}
 
 
-def test_star_path_equals_minlabel_path(spark):
+def test_star_path_equals_minlabel_path(spark, distributed_gates):
     """Both distributed engines converge to the identical labeling on
     the same graph (broadcast min-label loop vs contraction+star)."""
     random.seed(33)
@@ -119,23 +131,22 @@ def test_star_path_equals_minlabel_path(spark):
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     star = {
-        (r.doc_id, r.component) for r in _star_path(pairs).collect()
+        (r.doc_id, r.component)
+        for r in _star_path(distributed_gates, pairs).collect()
     }
     minlabel = {
         (r.doc_id, r.component)
-        for r in connected_components(
-            pairs, driver_threshold=0, strategy="minlabel"
-        ).collect()
+        for r in _star_path(distributed_gates, pairs, strategy="minlabel").collect()
     }
     assert star == minlabel
 
 
-def test_unknown_strategy_is_refused(spark):
+def test_unknown_strategy_is_refused(spark, distributed_gates):
     import pytest
 
     pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
     with pytest.raises(ValueError, match="star|minlabel"):
-        connected_components(pairs, driver_threshold=0, strategy="bogus")
+        _star_path(distributed_gates, pairs, strategy="bogus")
 
 
 def test_star_round_plan_never_joins_an_unbounded_edge_frame(spark):
@@ -164,7 +175,7 @@ def test_star_round_plan_never_joins_an_unbounded_edge_frame(spark):
     assert got == expect  # 37 residue-class star components
 
 
-def test_star_rounds_output_is_materialized_and_released(spark):
+def test_star_rounds_output_is_materialized_and_released(spark, distributed_gates):
     """ADVICE r10: _star_rounds leaked its final persisted edge frame
     and connected_components unpersisted the node frame before the
     output was consumed (recomputing the full pair scan downstream).
@@ -181,7 +192,7 @@ def test_star_rounds_output_is_materialized_and_released(spark):
     edges = [(random.randrange(60), random.randrange(60)) for _ in range(90)]
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    out = _star_path(pairs)
+    out = _star_path(distributed_gates, pairs)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in plan, plan
     # every persist taken during the call is released by return time;
@@ -200,9 +211,7 @@ def test_star_rounds_output_is_materialized_and_released(spark):
     assert leaked == [], f"persisted frames leaked by connected_components: {leaked}"
     assert {r.doc_id: r.component for r in out.collect()} == _driver_union_find(edges)
     # the minlabel engine follows the same release discipline (r11)
-    out_ml = connected_components(
-        pairs, driver_threshold=0, strategy="minlabel"
-    )
+    out_ml = _star_path(distributed_gates, pairs, strategy="minlabel")
     ml_plan = out_ml._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in ml_plan, ml_plan
     after_ml = {
@@ -220,7 +229,7 @@ def test_star_rounds_output_is_materialized_and_released(spark):
     } == _driver_union_find(edges)
 
 
-def test_cc_star_string_ids_fall_back_to_minlabel(spark):
+def test_cc_star_string_ids_fall_back_to_minlabel(spark, distributed_gates):
     """ADVICE r10: the star engine is int64-only; non-integral ids must
     route to the minlabel engine (any orderable type) instead of
     raising inside a task — on BOTH the distributed and driver-gate
@@ -231,7 +240,7 @@ def test_cc_star_string_ids_fall_back_to_minlabel(spark):
     expect = {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
     got = {
         r.doc_id: r.component
-        for r in connected_components(pairs, driver_threshold=0).collect()
+        for r in _star_path(distributed_gates, pairs).collect()
     }
     assert got == expect
     # driver-gate path: schema was hardcoded "long" before r11
@@ -240,17 +249,17 @@ def test_cc_star_string_ids_fall_back_to_minlabel(spark):
     assert {r.doc_id: r.component for r in gated.collect()} == expect
 
 
-def test_cc_star_int32_ids_cast_up_to_long(spark):
+def test_cc_star_int32_ids_cast_up_to_long(spark, distributed_gates):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (9, 9)], "doc_a int, doc_b int"
     )
-    out = connected_components(pairs, driver_threshold=0)
+    out = _star_path(distributed_gates, pairs)
     assert out.schema["doc_id"].dataType.simpleString() == "bigint"
     got = {r.doc_id: r.component for r in out.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 9: 9}
 
 
-def test_cc_star_pass1_repartition_branch(spark, monkeypatch):
+def test_cc_star_pass1_repartition_branch(spark, monkeypatch, distributed_gates):
     """Force the pass-1 sizing branch (ADVICE r10: a coarsely
     partitioned dense pair frame must be repartitioned before the
     first contraction) by shrinking the thresholds; the labeling must
@@ -267,15 +276,16 @@ def test_cc_star_pass1_repartition_branch(spark, monkeypatch):
     pairs = spark.createDataFrame(
         edges, "doc_a long, doc_b long"
     ).coalesce(1)  # one huge partition — the shape the branch guards
-    # driver_threshold=1: keeps the gate's count (which feeds pass-1
-    # sizing) without triggering the driver endgame; a forced
-    # driver_threshold=0 skips the valve by design (the count would
-    # re-evaluate the whole pair join — the r11 sf10 A/B lesson)
+    # a forced run counts the pairs and sizes pass 1 exactly as a
+    # graph over the driver limit does
+    tel: dict = {}
     got = {
         r.doc_id: r.component
-        for r in connected_components(pairs, driver_threshold=1).collect()
+        for r in _star_path(distributed_gates, pairs, telemetry=tel).collect()
     }
     assert got == _driver_union_find(edges)
+    assert tel["n_pairs"] == len(edges)
+    assert len(tel["forest_edge_trajectory"]) > 1, tel
 
 
 def test_sig_fixpoint_null_hash_forces_round():
@@ -294,7 +304,7 @@ def test_sig_fixpoint_null_hash_forces_round():
     assert not _sig_fixpoint((5, 123), (4, 123))
 
 
-def test_cc_telemetry_records_convergence(spark):
+def test_cc_telemetry_records_convergence(spark, distributed_gates):
     """telemetry= fills the convergence record off the aggregates the
     engine already runs (VERDICT r11 #7): edge trajectories, rounds to
     fixpoint, endgame — probes persist it so convergence regressions
@@ -314,9 +324,7 @@ def test_cc_telemetry_records_convergence(spark):
     ]
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     tel: dict = {}
-    labeled = connected_components(
-        df, driver_threshold=0, telemetry=tel
-    ).collect()
+    labeled = _star_path(distributed_gates, df, telemetry=tel).collect()
     assert tel["endgame"] == "star"
     assert tel["n_nodes"] == len({r["doc_id"] for r in labeled})
     assert tel["forest_edge_trajectory"][0] > 0
@@ -334,15 +342,15 @@ def test_cc_telemetry_records_convergence(spark):
     assert "endgame" not in tel2 or tel2["endgame"] == "driver"
 
 
-def test_cc_minlabel_telemetry_records_convergence(spark):
+def test_cc_minlabel_telemetry_records_convergence(spark, distributed_gates):
     from dataengineering_spark.operators.dedup import connected_components
 
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "doc_a long, doc_b long"
     )
     tel: dict = {}
-    connected_components(
-        df, driver_threshold=0, strategy="minlabel", telemetry=tel
+    _star_path(
+        distributed_gates, df, strategy="minlabel", telemetry=tel
     ).collect()
     assert tel["endgame"] == "minlabel"
     assert tel["n_nodes"] == 6

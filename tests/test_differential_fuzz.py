@@ -194,7 +194,7 @@ def test_range_frame_matches_duckdb_interval_window(spark, rows):
         max_size=20,
     )
 )
-def test_connected_components_match_union_find(spark, edges):
+def test_connected_components_match_union_find(spark, distributed_gates, edges):
     """Min-label propagation vs a pure-Python union-find on random
     graphs — chains, cycles, self-loops, and isolated pairs included;
     the distributed fixpoint must produce exactly the min-id labeling."""
@@ -203,23 +203,19 @@ def test_connected_components_match_union_find(spark, edges):
     pairs = spark.createDataFrame(
         [(a, b) for a, b in edges], "doc_a long, doc_b long"
     )
-    # driver_threshold=0 forces the distributed engines — the paths
-    # this fuzz exists to cover; the size-gated driver fallback is
-    # checked against the same reference below.
-    got = {
-        (r[0], r[1])
-        for r in connected_components(
-            pairs, driver_threshold=0, strategy="minlabel"
-        ).collect()
-    }
+    # the fixture forces the distributed engines — the paths this fuzz
+    # exists to cover; the size-gated driver fallback is checked
+    # against the same reference below.
+    with distributed_gates():
+        got = {
+            (r[0], r[1])
+            for r in connected_components(pairs, strategy="minlabel").collect()
+        }
+        # the r10 default: partition-forest contraction +
+        # large-star/small-star rounds
+        got_star = {(r[0], r[1]) for r in connected_components(pairs).collect()}
     got_driver = {
         (r[0], r[1]) for r in connected_components(pairs).collect()
-    }
-    # the r10 default: partition-forest contraction +
-    # large-star/small-star rounds
-    got_star = {
-        (r[0], r[1])
-        for r in connected_components(pairs, driver_threshold=0).collect()
     }
 
     parent: dict[int, int] = {}
@@ -859,7 +855,9 @@ def test_cusum_changepoint_matches_python_scan(spark, rows):
     st.integers(1, 4),
     st.integers(1, 3),
 )
-def test_kcore_peel_driver_gate_matches_distributed(spark, raw, k, iters):
+def test_kcore_peel_driver_gate_matches_distributed(
+    spark, distributed_gates, raw, k, iters
+):
     """The size-gated driver peel must replay the distributed bounded
     supersteps exactly — same fixed round count, same surviving degree
     table — on random graphs including stars, cycles, and isolates."""
@@ -870,10 +868,8 @@ def test_kcore_peel_driver_gate_matches_distributed(spark, raw, k, iters):
     if not edges:
         return
     df = spark.createDataFrame(sorted(edges), "a long, b long")
-    dist = {
-        (r.node, r.degree)
-        for r in kcore_peel(df, k, iters, driver_threshold=0).collect()
-    }
+    with distributed_gates():
+        dist = {(r.node, r.degree) for r in kcore_peel(df, k, iters).collect()}
     drv = {(r.node, r.degree) for r in kcore_peel(df, k, iters).collect()}
     release_tracked()
     assert dist == drv

@@ -6,6 +6,8 @@ groups all land in the sample space."""
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -139,44 +141,51 @@ def test_weighted_median_matches_expansion(spark, rows):
     assert got == want
 
 
-@settings(**_SETTINGS)
-@given(
-    st.lists(
-        st.integers(-50, 50),  # values with ties likely
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_global_discrete_pcts_matches_sorted_rank(spark, vals):
-    """The RangePartitioner-pattern global percentile must equal the
-    value at rank floor(p*(n-1))+1 of the fully sorted list."""
-    from dataengineering_spark.operators.robust import global_discrete_pcts
+# values with ties likely; NULL on both column types, NaN only in double
+_PCT_VALUES = {
+    "long": st.one_of(st.integers(-50, 50), st.none()),
+    "double": st.one_of(
+        st.integers(-50, 50).map(float), st.none(), st.just(math.nan)
+    ),
+}
 
-    pdf = pd.DataFrame({"v": vals})
-    pdf["uid"] = range(len(pdf))
-    df = spark.createDataFrame(pdf)
-    ordered = sorted(zip(pdf["v"], pdf["uid"]))
+
+@pytest.mark.parametrize("dtype", sorted(_PCT_VALUES))
+@settings(**_SETTINGS)
+@given(data=st.data())
+def test_global_discrete_pcts_matches_sorted_rank(
+    spark, distributed_gates, dtype, data
+):
+    """The RangePartitioner-pattern global percentile must equal the
+    value at rank floor(p*(n-1))+1 of the fully sorted list (NULLs
+    first, NaN last, as Spark orders), and None on an empty frame."""
+    from dataengineering_spark.operators.robust import (
+        _global_pct_order_key,
+        global_discrete_pcts,
+    )
+    from tests.conftest import _norm
+
+    vals = data.draw(st.lists(_PCT_VALUES[dtype], max_size=60))
+    df = spark.createDataFrame(
+        [(v, i) for i, v in enumerate(vals)], f"v {dtype}, uid long"
+    )
+    ordered = sorted(vals, key=_global_pct_order_key)
     n = len(ordered)
+    pcts, names = (0.25, 0.5, 0.9), ("a", "b", "c")
     want = {
-        nm: ordered[int(p * (n - 1))][0]
-        for p, nm in zip((0.25, 0.5, 0.9), ("a", "b", "c"))
+        nm: _norm(ordered[int(p * (n - 1))] if n else None)
+        for p, nm in zip(pcts, names)
     }
-    # both the r14 small-frame driver gate (default threshold) and the
-    # distributed RangePartitioner path (threshold forced off) must
-    # select the identical rank values
-    got = global_discrete_pcts(
-        df, val="v", tie="uid", pcts=(0.25, 0.5, 0.9), names=("a", "b", "c")
-    )
-    assert got == want
-    got_dist = global_discrete_pcts(
-        df,
-        val="v",
-        tie="uid",
-        pcts=(0.25, 0.5, 0.9),
-        names=("a", "b", "c"),
-        driver_threshold=0,
-    )
-    assert got_dist == want
+    # both the small-frame driver gate and the distributed
+    # RangePartitioner path (forced by the fixture) must select the
+    # identical rank values
+    got = global_discrete_pcts(df, val="v", tie="uid", pcts=pcts, names=names)
+    assert {k: _norm(v) for k, v in got.items()} == want
+    with distributed_gates():
+        got_dist = global_discrete_pcts(
+            df, val="v", tie="uid", pcts=pcts, names=names
+        )
+    assert {k: _norm(v) for k, v in got_dist.items()} == want
 
 
 @settings(**_SETTINGS)

@@ -108,6 +108,22 @@ def test_compact_pairs_to_forest_preserves_drain(spark, tmp_path):
     assert _labels(spark, pairs_dir) == merged_labels
 
 
+def test_pairs_to_forest_frame_merges_small_partitions(spark):
+    """A forest pass contracts only within a partition: the replica
+    graph spread over 32 partitions must still come back as a forest,
+    one row per node (its root self-rows included)."""
+    from dataengineering_spark.streaming.curation import pairs_to_forest_frame
+
+    pairs = _replica_pairs()
+    nodes = {n for p in pairs for n in p}
+    edges = spark.createDataFrame(pairs, "src long, dst long").repartition(32)
+    assert edges.rdd.getNumPartitions() >= 32
+    forest, _passes = pairs_to_forest_frame(edges)
+    assert (len(pairs), len(nodes)) == (940, 146)
+    assert forest.count() == len(nodes)
+    forest.unpersist()
+
+
 def test_compact_pairs_missing_or_empty_store_is_noop(spark, tmp_path):
     missing = str(tmp_path / "never_written")
     assert compact_pairs_to_forest(spark, missing) == {

@@ -87,7 +87,7 @@ def test_empty_corpus_raises_value_error(spark):
         semantic_dedup_members(empty, n_centroids=2, n_iters=1, dim=DIM).collect()
 
 
-def test_connected_components_converges_logarithmically(spark):
+def test_connected_components_converges_logarithmically(spark, distributed_gates):
     # pointer jumping makes a diameter-D chain converge in O(log D)
     # rounds; plain propagation needs D. A 500-edge chain under
     # max_iterations=12 (log2(500) ~ 9) must reach fixpoint with no
@@ -101,11 +101,10 @@ def test_connected_components_converges_logarithmically(spark):
     )
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
-        # driver_threshold=0: this guard is about the DISTRIBUTED
-        # loop's round count, so bypass the small-graph driver path
-        labels = connected_components(
-            chain, max_iterations=12, driver_threshold=0
-        ).collect()
+        # this guard is about the DISTRIBUTED loop's round count, so
+        # bypass the small-graph driver path
+        with distributed_gates():
+            labels = connected_components(chain, max_iterations=12).collect()
     assert len(labels) == 501
     assert {r.component for r in labels} == {0}
 

@@ -24,6 +24,9 @@
 #    `distributed_gates` fixture (tests/conftest.py), never with a
 #    knob, and checks both branches on NULL, empty, NaN and unicode
 #    input.
+# 7. Cross-batch driver state goes in streaming/state.SyncStateStore
+#    or is re-derived from an epoch store (streaming/store.py); never
+#    add a hand-rolled log.
 
 .PHONY: fast test test-slow perfbench-test parity streaming bench ship
 
@@ -53,10 +56,11 @@ parity:
 	python scripts/parity_sweep.py
 
 # the streaming suites: every sink, the partials and index lanes, store
-# recovery and compaction, and the sync loop, slow-marked files
+# recovery and compaction, the sync loop and its properties, the
+# rate-limited source and the stateful operators, slow-marked files
 # included (not part of ship)
 streaming:
-	python -m pytest tests/test_streaming_*.py tests/test_reps_and_store_recovery.py tests/test_pair_store_maintenance.py tests/test_sync.py -q -m "slow or not slow"
+	python -m pytest tests/test_streaming_*.py tests/test_reps_and_store_recovery.py tests/test_pair_store_maintenance.py tests/test_sync.py tests/test_sync_property.py tests/test_rate_limited.py tests/test_skew_stateful.py -q -m "slow or not slow"
 
 bench:
 	python bench.py

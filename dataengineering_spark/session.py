@@ -52,15 +52,9 @@ def get_spark(
         # fifo_match 2.60→1.82 s, topk_churn 2.77→1.91 s, semantic_dedup
         # 4.05→2.23 s). At production scale (post-shuffle partitions ≫
         # cores) coalescing is size-bounded either way, so "true" only
-        # changes the small-stage regime; override via env for A/Bs.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"),
-        )
+        # changes the small-stage regime.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",

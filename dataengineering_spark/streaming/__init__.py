@@ -1,14 +1,9 @@
-from dataengineering_spark.streaming.state import (
-    SyncState,
-    SyncStateStore,
-    TableSyncStateStore,
-)
+from dataengineering_spark.streaming.state import SyncState, SyncStateStore
 from dataengineering_spark.streaming.runner import IncrementalSyncRunner, SyncConfig
 
 __all__ = [
     "SyncStateStore",
     "SyncState",
-    "TableSyncStateStore",
     "IncrementalSyncRunner",
     "SyncConfig",
 ]

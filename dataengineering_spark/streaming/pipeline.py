@@ -10,7 +10,7 @@ Each piece exists standalone (``rate_limited.block_range_stream``,
 ``structured.run_foreach_batch``, ``state.SyncStateStore``); this
 module is the wired composition — the streaming equivalent of
 ``runner.IncrementalSyncRunner.run_to_head`` with the engine's
-checkpoint (plus the reader's cursor file) replacing the scheduler's
+checkpoint (plus the reader's cursor store) replacing the scheduler's
 re-invocation loop.
 
 Scale shape: the source negotiates offsets against parquet footer
@@ -61,7 +61,7 @@ def streaming_sync_pipeline(
     ``trigger_once=True`` drains exactly one clamped range per call —
     the reference's scheduler-tick model; ``False`` drains the whole
     backlog continuously in clamped steps. Restarts resume from the
-    engine checkpoint, with the reader's cursor file (kept inside
+    engine checkpoint, with the reader's cursor store (kept inside
     ``checkpoint_dir``) keeping the very first clamp of a fresh run
     aligned with the last committed offset.
     """
@@ -83,6 +83,8 @@ def streaming_sync_pipeline(
                 sink(out, epoch_id)
         finally:
             out.unpersist()
-        commit_from_destination(store, stream_name, destination_max)
+        commit_from_destination(
+            store, stream_name, store.get(stream_name), destination_max()
+        )
 
     return run_foreach_batch(stream, batch_fn, checkpoint_dir, trigger_once)

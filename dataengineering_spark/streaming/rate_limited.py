@@ -32,20 +32,21 @@ Options (all strings, per the DataSource API):
 - ``streamingLag``      blocks held back from head (default 0)
 - ``startOffset``       exclusive start (default -1: from the origin)
 - ``rangeSplits``       input partitions per trigger (default 8)
-- ``cursorPath``        optional file the reader persists its committed
-  offset to (atomic tmp+rename on ``commit``) and restores from on
+- ``cursorPath``        optional ``SyncStateStore`` root the reader
+  commits its offset to on ``commit`` and restores it from on
   construction. Without it, a checkpoint restart builds a fresh reader
   whose FIRST ``latestOffset`` runs before ``partitions()`` can heal
   the cursor from the engine's start, so the first clamp is computed
   from ``startOffset`` — an ``availableNow`` restart then drains
   nothing for that run (one ``latestOffset`` per start), and a
   ``processingTime`` restart wastes its first trigger. Point this at a
-  file next to the engine's checkpointLocation to make restarts
+  directory next to the engine's checkpointLocation to make restarts
   resume exactly where the last commit left off.
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -54,6 +55,11 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 from pyspark.sql.types import StructType
+
+from dataengineering_spark.streaming.state import SyncState, SyncStateStore
+
+# the stream name the reader's cursor is committed under
+_CURSOR_STREAM = "cursor"
 
 
 class BlockRangePartition(InputPartition):
@@ -114,25 +120,14 @@ class BlockRangeStreamReader(DataSourceStreamReader):
         the first clamp would regress to ``startOffset``."""
         if not self.cursor_path:
             return None
-        import os
-
-        if not os.path.exists(self.cursor_path):
-            return None
-        try:
-            with open(self.cursor_path) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            return None
+        state = SyncStateStore(self.cursor_path).get(_CURSOR_STREAM)
+        return None if state == SyncState.initial() else state.last_synced_block
 
     def _persist_cursor(self, offset: int) -> None:
-        if not self.cursor_path:
-            return
-        import os
-
-        tmp = f"{self.cursor_path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(str(offset))
-        os.replace(tmp, self.cursor_path)  # atomic on POSIX
+        if self.cursor_path:
+            state = replace(SyncState.initial(), last_synced_block=offset,
+                            latest_block=offset)
+            SyncStateStore(self.cursor_path).commit(_CURSOR_STREAM, state)
 
     def initialOffset(self) -> dict:
         return {"block": self.start}
@@ -223,9 +218,9 @@ def block_range_stream(
     cursor_path: str | None = None,
 ):
     """Convenience: register the source (idempotent) and open a
-    rate-limited readStream over ``path``. Pass ``cursor_path`` (a file
-    next to your checkpointLocation) so query restarts clamp from the
-    last committed offset instead of ``start_offset``."""
+    rate-limited readStream over ``path``. Pass ``cursor_path`` (a
+    directory next to your checkpointLocation) so query restarts clamp
+    from the last committed offset instead of ``start_offset``."""
     spark.dataSource.register(BlockRangeDataSource)
     reader = (
         spark.readStream.format("block_range")

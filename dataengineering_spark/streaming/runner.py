@@ -65,6 +65,9 @@ class IncrementalSyncRunner:
         self.config = config
         # the head run_to_head drains to; None outside a drain
         self._drain_head: float | None = None
+        # the stream's state as of this runner's last check or commit;
+        # the commit builds on it instead of re-reading the store
+        self._state: SyncState | None = None
 
     # -- T2: offset negotiation -----------------------------------------
 
@@ -76,7 +79,8 @@ class IncrementalSyncRunner:
         return -1 if head is None else head
 
     def check_sync_status(self, source: DataFrame) -> SyncRange:
-        last = self.store.get(self.config.stream).last_synced_block
+        self._state = self.store.get(self.config.stream)
+        last = self._state.last_synced_block
         head = self._drain_head
         if head is None or last >= head - self.config.streaming_lag:
             head = self._probe_head(source)
@@ -149,8 +153,13 @@ class IncrementalSyncRunner:
 
     def commit_from_destination(self, destination_max: Callable[[], int | None]) -> SyncState:
         """Commit what landed, not what was attempted (reference
-        ``set_latest_block``, ``airflow/bitquery.py:288-351``)."""
-        return sync_state.commit_from_destination(self.store, self.config.stream, destination_max)
+        ``set_latest_block``, ``airflow/bitquery.py:288-351``), on top
+        of the state the last check read."""
+        prev = self._state or self.store.get(self.config.stream)
+        self._state = sync_state.commit_from_destination(
+            self.store, self.config.stream, prev, destination_max()
+        )
+        return self._state
 
     # -- drain loop ------------------------------------------------------
 
@@ -179,7 +188,7 @@ class IncrementalSyncRunner:
                 if rng is None:
                     break
                 done.append(rng)
-                if self.store.get(self.config.stream).last_synced_block == rng.last_synced:
+                if self._state.last_synced_block == rng.last_synced:
                     raise RuntimeError(
                         f"sync of {self.config.stream!r} stalled: batch "
                         f"({rng.last_synced}, {rng.latest}] did not move the "

@@ -17,10 +17,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 RUNNING_TOTALS_SCHEMA = T.StructType(
     [
@@ -80,64 +76,6 @@ def running_totals(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-class _RunningTotalsProcessor(StatefulProcessor):
-    """transformWithStateInPandas processor mirroring running_totals:
-    per-key accumulated (rows, value) in a ValueState. The Spark-4
-    successor API to applyInPandasWithState — typed state handles
-    (value/list/map), timers, and TTL replace the single tuple blob."""
-
-    def __init__(self, value_col: str):
-        self._value_col = value_col
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._totals = handle.getValueState(
-            "totals", "total_rows BIGINT, total_value DOUBLE"
-        )
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        n = 0
-        value = 0.0
-        for pdf in rows:
-            n += len(pdf)
-            value += float(pdf[self._value_col].sum())
-        if self._totals.exists():
-            prev_rows, prev_value = self._totals.get()
-        else:
-            prev_rows, prev_value = 0, 0.0
-        self._totals.update((prev_rows + n, prev_value + value))
-        yield pd.DataFrame(
-            {
-                "key": [str(key[0])],
-                "batch_rows": [n],
-                "total_rows": [prev_rows + n],
-                "total_value": [prev_value + value],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_totals_tws(
-    grouped_stream: DataFrame,
-    key_col: str,
-    value_col: str,
-) -> DataFrame:
-    """running_totals on the transformWithStateInPandas API (Spark 4
-    successor to applyInPandasWithState). Same output contract; state
-    lives in a typed ValueState handle, extensible with timers/TTL.
-
-    Runtime requirement: the executor Python environment must provide
-    ``google.protobuf`` (the API's state-server protocol) — present on
-    standard cluster images; tests skip where it is absent."""
-    return grouped_stream.groupBy(key_col).transformWithStateInPandas(
-        _RunningTotalsProcessor(value_col),
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -171,7 +171,7 @@ def test_rate_limited_restart_resumes_from_cursor(spark, tmp_path):
     clamp from startOffset and the restarted run would drain nothing."""
     src = str(tmp_path / "blocks")
     ckpt = str(tmp_path / "ckpt_restart")
-    cursor = str(tmp_path / "cursor.txt")
+    cursor = str(tmp_path / "cursor")
     _write_blocks(spark, src)
 
     def run_once():

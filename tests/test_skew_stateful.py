@@ -14,7 +14,6 @@ from dataengineering_spark.operators.skew import (
 )
 from dataengineering_spark.streaming.stateful import (
     running_totals,
-    running_totals_tws,
     streaming_dedup_first_seen,
 )
 from dataengineering_spark.streaming.structured import interval_join
@@ -58,8 +57,6 @@ def test_salted_join_left_outer(spark):
 
 
 def test_salted_join_rejects_right_preserving(spark):
-    import pytest
-
     left = _skewed(spark)
     right = spark.createDataFrame([("hub", 1.5)], "k string, w double")
     for how in ("right", "full", "full_outer", "outer"):
@@ -175,65 +172,6 @@ def test_streaming_dedup_first_seen(spark, tmp_path):
     assert first_seen[0][1] + later[0][1] == 2  # 3 occurrences - 1 first
     assert by_fp["b"] == [(0, 0)]
     assert by_fp["c"] == [(0, 0)]
-
-
-def _has_protobuf() -> bool:
-    """transformWithStateInPandas drives a protobuf-based state-server
-    protocol; skip where google.protobuf is absent (this container)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas requires google.protobuf in the worker",
-)
-def test_running_totals_tws_across_microbatches(spark, tmp_path):
-    """transformWithStateInPandas variant must accumulate the same
-    final totals as the applyInPandasWithState one."""
-    ev = read_table(spark, "events", SF_SMOKE).select(
-        "event_id", "event_type", "value"
-    )
-    src = str(tmp_path / "in")
-    ev.filter("event_id < 300").coalesce(1).write.mode("append").parquet(src)
-    ev.filter("event_id >= 300 AND event_id < 600").coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        running_totals_tws(stream, "event_type", "value")
-        .writeStream.format("memory")
-        .queryName("tws_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    res = spark.sql("SELECT * FROM tws_totals")
-    finals = {
-        r.key: r.rows
-        for r in res.groupBy("key").agg(F.max("total_rows").alias("rows")).collect()
-    }
-    want = {
-        r.event_type: r.n
-        for r in ev.filter("event_id < 600")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert finals == want
-    assert res.filter("total_rows > batch_rows").count() > 0
 
 
 def test_interval_join_stream_equals_batch(spark, tmp_path):

@@ -56,7 +56,6 @@ def _drain(spark, tmp_path):
     q = run_foreach_batch(
         stream,
         token_shards_batch_fn(
-            state_root=str(tmp_path / "state"),
             out_dir=str(tmp_path / "shards"),
             size_col="n_chars",
             order_col="doc_id",
@@ -88,14 +87,38 @@ def test_epoch_replay_reproduces_not_advances(spark, tmp_path):
     out = str(tmp_path / "shards")
     before = _rows(accumulated_shards(spark, out))
     n_raw = spark.read.parquet(out).count()
-    fn = token_shards_batch_fn(
-        str(tmp_path / "state"), out, "n_chars", "doc_id", BUDGET
-    )
-    # replay the MIDDLE epoch: its state entry exists, so base must be
-    # re-read from its own entry, producing byte-identical rows
+    fn = token_shards_batch_fn(out, "n_chars", "doc_id", BUDGET)
+    # replay the MIDDLE epoch: the store already holds it, so the
+    # replay must leave the assignment byte-identical
     lo, hi = RANGES[1]
     fn(docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)), 1)
     release_tracked()
     assert _rows(accumulated_shards(spark, out)) == before
     # the replay wrote nothing: the raw store, read without distinct
     assert spark.read.parquet(out).count() == n_raw
+
+
+def test_direct_calls_with_gaps_empty_epoch_and_replay(spark, tmp_path):
+    """Epoch ids need not be contiguous: each epoch's base is
+    re-derived from the highest epoch the store holds, an empty epoch
+    writes nothing, and a replay below the store's mark is a no-op."""
+    docs = _docs(spark)
+    out = str(tmp_path / "shards")
+    fn = token_shards_batch_fn(out, "n_chars", "doc_id", BUDGET)
+    part = [
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+        for lo, hi in RANGES
+    ]
+    fn(part[0], 0)
+    fn(part[1], 2)
+    fn(docs.limit(0), 3)
+    fn(part[2], 5)
+    n_raw = spark.read.parquet(out).count()
+    fn(part[1], 2)
+    got = _rows(accumulated_shards(spark, out))
+    ref = _rows(token_budget_shards(docs, "n_chars", "doc_id", BUDGET))
+    release_tracked()
+    assert got == ref
+    assert spark.read.parquet(out).count() == n_raw
+    epochs = {r.epoch_id for r in spark.read.parquet(out).select("epoch_id").distinct().collect()}
+    assert epochs == {0, 2, 5}

@@ -18,7 +18,11 @@ import pandas as pd
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from dataengineering_spark.streaming.rate_limited import block_range_stream
+from dataengineering_spark.streaming.rate_limited import (
+    _CURSOR_STREAM,
+    block_range_stream,
+)
+from dataengineering_spark.streaming.state import SyncStateStore
 
 import pytest
 
@@ -31,13 +35,7 @@ PER_TRIGGER = 10  # → exactly 50 clamped ranges end-to-end
 
 
 def _read_cursor(path: str) -> int:
-    if not os.path.exists(path):
-        return -1
-    try:
-        with open(path) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
-        return -1
+    return SyncStateStore(path).get(_CURSOR_STREAM).last_synced_block
 
 
 def test_block_range_soak_50_batches_with_kill_resume(spark, tmp_path):
@@ -96,7 +94,7 @@ def test_block_range_soak_50_batches_with_kill_resume(spark, tmp_path):
     # --- resume from the committed cursor, drain to the head -----------
     # Completion is observed at the SINK (all 50 range files landed):
     # the engine only delivers a batch's source-commit callback when the
-    # NEXT batch starts, so once the backlog is drained the cursor file
+    # NEXT batch starts, so once the backlog is drained the cursor
     # legitimately trails the head by one clamp until the next trigger.
     def all_ranges_landed() -> bool:
         return (

@@ -3,17 +3,17 @@ lag/batch clamps, destination-derived commit, failure self-healing."""
 
 from __future__ import annotations
 
+import os
+import sys
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
 from dataengineering_spark.catalog import read_table
 from dataengineering_spark.sources.io import read_any
 from dataengineering_spark.streaming.runner import IncrementalSyncRunner, SyncConfig
-from dataengineering_spark.streaming.state import (
-    SyncState,
-    SyncStateStore,
-    TableSyncStateStore,
-)
+from dataengineering_spark.streaming.state import SyncState, SyncStateStore
 from tests.conftest import SF_SMOKE
 
 
@@ -79,6 +79,80 @@ def test_state_store_roundtrip(tmp_path):
     store.commit("s", SyncState(20, "2024-01-02", 22, "2024-01-02"))
     assert store.get("s").last_synced_block == 20
     assert [s.last_synced_block for s in store.history("s")] == [10, 20]
+
+
+def test_state_store_commit_race_keeps_both(tmp_path, monkeypatch):
+    """Two committers race for one version: store B publishes inside
+    store A's listing window, so A targets a version B just took. A's
+    create-exclusive publish fails, and A re-lists and lands at the
+    next version instead of overwriting B's record."""
+    store = SyncStateStore(str(tmp_path))
+    racer = SyncStateStore(str(tmp_path))
+    store.commit("s", SyncState(1, "2024-01-01", 1, "2024-01-01"))
+    raced: list[int] = []
+    listing = store._versions
+
+    def racing_versions(stream):
+        found = listing(stream)
+        if not raced:
+            raced.append(racer.commit("s", SyncState(2, "2024-01-02", 2, "2024-01-02")))
+        return found
+
+    monkeypatch.setattr(store, "_versions", racing_versions)
+    mine = store.commit("s", SyncState(3, "2024-01-03", 3, "2024-01-03"))
+    assert raced == [1] and mine == 2
+    assert [s.last_synced_block for s in store.history("s")] == [1, 2, 3]
+    assert sorted(os.listdir(tmp_path / "s")) == [f"{v:010d}.json" for v in range(3)]
+
+
+def test_state_store_concurrent_commits_all_land(tmp_path):
+    """More committing threads than cores, each with its own store on
+    one root: every commit lands under its own version."""
+    n_threads, per_thread = 8, 10
+    root = str(tmp_path)
+    versions: list[int] = []
+    lock = threading.Lock()
+
+    def worker(t):
+        store = SyncStateStore(root)
+        for i in range(per_thread):
+            v = store.commit("s", SyncState(t * 100 + i, "x", 0, "x"))
+            with lock:
+                versions.append(v)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads)
+    assert sorted(versions) == list(range(n_threads * per_thread))
+    landed = sorted(s.last_synced_block for s in SyncStateStore(root).history("s"))
+    assert landed == sorted(t * 100 + i for t in range(n_threads) for i in range(per_thread))
+
+
+def test_drain_reads_state_once_per_batch(spark, tmp_path, monkeypatch):
+    """A batch reads the committed state once, in its check: the
+    commit builds on that read and the stall check on the commit."""
+    runner, store = make_runner(spark, tmp_path, batch_size=100)
+    gets: list[str] = []
+    commits: list[int] = []
+    get, commit = store.get, store.commit
+    monkeypatch.setattr(store, "get", lambda s: gets.append(s) or get(s))
+    monkeypatch.setattr(
+        store, "commit", lambda s, st: commits.append(st.last_synced_block) or commit(s, st)
+    )
+    _, sink, dest_max = memory_dest()
+    src = spark.range(300).select(F.col("id").alias("block"))
+    ranges = runner.run_to_head(src, lambda d: d, sink, dest_max)
+    assert len(ranges) == 3
+    assert len(gets) == 3 + 1  # one per batch, plus the final gate probe
+    assert commits == [99, 199, 299]
 
 
 def test_gate_short_circuits_when_caught_up(spark, tmp_path, events):
@@ -225,56 +299,6 @@ def test_range_predicate_pushdown(spark, tmp_path, events):
     plan = batch._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert "GreaterThan" in plan and "LessThanOrEqual" in plan
-
-
-def test_table_state_store_roundtrip_and_current(spark, tmp_path):
-    """TableSyncStateStore: per-stream versioning, queryable current()
-    across streams, history preserved."""
-    store = TableSyncStateStore(spark, str(tmp_path / "offsets"))
-    assert store.get("eth") == SyncState.initial()
-    s1 = SyncState(100, "2024-01-01", 150, "2024-01-02")
-    s2 = SyncState(150, "2024-01-02", 200, "2024-01-03")
-    assert store.commit("eth", s1) == 0
-    assert store.commit("eth", s2) == 1
-    assert store.commit("btc", s1) == 0
-    assert store.get("eth") == s2
-    assert store.get("btc") == s1
-    cur = {
-        r.stream: (r.version, r.last_synced_block)
-        for r in store.current().collect()
-    }
-    assert cur == {"eth": (1, 150), "btc": (0, 100)}
-    assert store.history("eth") == [s1, s2]
-    assert store.snapshot().count() == 3
-
-
-def test_table_state_store_commit_race_retries(spark, tmp_path):
-    """Optimistic concurrency: when the target version file already
-    exists (a racing committer won), commit retries at the next
-    version instead of overwriting."""
-    store = TableSyncStateStore(spark, str(tmp_path / "offsets"))
-    s1 = SyncState(1, "2024-01-01", 2, "2024-01-01")
-    store.commit("eth", s1)
-    # simulate a racer that already published version 1
-    racer = TableSyncStateStore(spark, str(tmp_path / "offsets"))
-    racer.commit("eth", SyncState(2, "2024-01-02", 3, "2024-01-02"))
-    v = store.commit("eth", SyncState(3, "2024-01-03", 4, "2024-01-03"))
-    assert v == 2
-    assert store.get("eth").last_synced_block == 3
-    assert [s.last_synced_block for s in store.history("eth")] == [1, 2, 3]
-
-
-def test_table_state_store_prefix_stream_names(spark, tmp_path):
-    """A stream whose name extends another's must not corrupt the
-    shorter stream's version sequence."""
-    store = TableSyncStateStore(spark, str(tmp_path / "offsets"))
-    s = SyncState(1, "2024-01-01", 2, "2024-01-01")
-    store.commit("a", s)
-    store.commit("a-b", s)
-    store.commit("a-b", SyncState(5, "2024-01-02", 6, "2024-01-02"))
-    assert store.get("a") == s
-    assert store.get("a-b").last_synced_block == 5
-    assert len(store.history("a")) == 1
 
 
 def test_lag_gauge_tracks_drain(spark, tmp_path, events):
